@@ -26,6 +26,19 @@ import org.apache.spark.sql.SparkSession
   */
 object Bench {
 
+  /** The per-query seconds of an artifact's `"queries":{…}` map, empty
+    * when there is none. Whitespace-tolerant: record_baseline writes
+    * `"queries": {` (json.dump spacing), Bench itself `"queries":{`. */
+  private def queriesMap(txt: String): Map[String, Double] =
+    """"queries"\s*:\s*\{""".r.findFirstMatchIn(txt) match {
+      case None => Map.empty
+      case Some(m) =>
+        val body = txt.substring(m.end, txt.indexOf('}', m.end))
+        """"([A-Za-z0-9_]+)"\s*:\s*(-?[0-9.eE+-]+)""".r
+          .findAllMatchIn(body)
+          .map(g => g.group(1) -> g.group(2).toDouble).toMap
+    }
+
   /** Fork a fresh JVM running this same Bench main restricted to
     * `names` at `cpus` threads/partitions, and return its per-query
     * medians (the fresh-session numbers the adjudicator records as
@@ -78,16 +91,8 @@ object Bench {
         return Map.empty
       }
       val txt = new String(java.nio.file.Files.readAllBytes(tmpOut), "UTF-8")
-      val parsed = """"queries"\s*:\s*\{""".r.findFirstMatchIn(txt) match {
-        case None => Map.empty[String, Double]
-        case Some(m) =>
-          val body = txt.substring(m.end, txt.indexOf('}', m.end))
-          """"([A-Za-z0-9_]+)"\s*:\s*(-?[0-9.eE+-]+)""".r
-            .findAllMatchIn(body)
-            .map(g => g.group(1) ->
-              (if (g.group(2).toDouble < 0) -1.0 else g.group(2).toDouble))
-            .toMap
-      }
+      val parsed = queriesMap(txt)
+        .map { case (k, v) => k -> (if (v < 0) -1.0 else v) }
       keepLog = parsed.isEmpty // empty parse is a failure worth a log
       parsed
     } catch { case t: Throwable =>
@@ -309,19 +314,7 @@ object Bench {
         .findFirstMatchIn(txt).map(_.group(1)).orNull
       val sfOk = """"sf"\s*:\s*"([^"]*)"""".r.findFirstMatchIn(txt)
         .exists(_.group(1) == sfDir)
-      if (!sfOk) Map.empty
-      else {
-        // whitespace-tolerant: record_baseline writes `"queries": {`
-        // (json.dump spacing), Bench itself writes `"queries":{`
-        """"queries"\s*:\s*\{""".r.findFirstMatchIn(txt) match {
-          case None => Map.empty
-          case Some(m) =>
-            val body = txt.substring(m.end, txt.indexOf('}', m.end))
-            """"([A-Za-z0-9_]+)"\s*:\s*(-?[0-9.eE+-]+)""".r
-              .findAllMatchIn(body)
-              .map(g => g.group(1) -> g.group(2).toDouble).toMap
-        }
-      }
+      if (!sfOk) Map.empty else queriesMap(txt)
     } catch { case _: Throwable => Map.empty }
     val hostFactor: Double = {
       val ratios = results.collect { case (n, sec, _, _, _)
@@ -467,20 +460,26 @@ object Bench {
     // host diagnosis in the compact line itself so a driver tail alone
     // distinguishes host load from code regression:
     //   vs_baseline_total   Σnow / Σbaseline over every query present
-    //                       in both (same sf + cpus enforced above)
-    //   vs_baseline_geomean geometric mean of per-query now/baseline
+    //                       in both (same sf enforced above); -1 unless
+    //                       the baseline was recorded at this run's cpus
+    //   vs_baseline_geomean geometric mean of per-query now/baseline,
+    //                       same cpus condition
     //   n_flagged           queries >2x baseline (+0.5s floor) this run
     //   n_isolated_at_base  flagged queries whose fresh-JVM re-time
-    //                       clears the same threshold (= host noise)
+    //                       clears the same threshold (= host noise);
+    //                       -1 when adjudication is off
     val common = results.collect { case (n, sec, _, _, _)
       if sec >= 0 && baseline.get(n).exists(_ > 0) => (sec, baseline(n)) }
+    val comparable = common.nonEmpty && baselineCpus == cpus
     val vsBaseTotal =
-      if (common.isEmpty) -1.0 else common.map(_._1).sum / common.map(_._2).sum
+      if (!comparable) -1.0 else common.map(_._1).sum / common.map(_._2).sum
     val vsBaseGeo =
-      if (common.isEmpty) -1.0
+      if (!comparable) -1.0
       else math.exp(common.map(c => math.log(c._1 / c._2)).sum / common.size)
-    val nIsolatedAtBase = adjudicated.count { case (_, _, iso, b) =>
-      iso >= 0 && !(iso > 2 * b && iso > b + 0.5) }
+    val nIsolatedAtBase =
+      if (!adjudicate) -1
+      else adjudicated.count { case (_, _, iso, b) =>
+        iso >= 0 && !(iso > 2 * b && iso > b + 0.5) }
     println(s"""{"metric":"total","value":${f3(total)},"unit":"sec","protocol":"$protocol","cpus":"$cpus","steady_total":${f3(steadyTotal)},"host_factor":${f3(hostFactor)},"vs_baseline_total":${f3(vsBaseTotal)},"vs_baseline_geomean":${f3(vsBaseGeo)},"n_baseline_common":${common.size},"n_flagged":${flagged.size},"n_isolated_at_base":$nIsolatedAtBase,"queries":$qsCompact,"n_queries":${results.size},"queries_full":"$out","errors":$errors,"sf":"$sfDir"}""")
     System.out.flush()
   }

@@ -67,21 +67,6 @@ object Analytics {
     * group's first global rank (a groups-sized broadcast). No Window
     * node anywhere in the plan; ScaleSpec pins the single-giant-group
     * case against a local exact computation. */
-  /** Memo for [[winsorizedDistributed]]'s ranked stage, keyed on
-    * (session, canonicalized input plan, parts). `globalRowNumber`
-    * returns a FRESH LogicalRDD each call, so the previous bare
-    * `Caches.shared(...)` per execution never canonicalized equal to
-    * the prior run's entry — every execution re-ran the range sort +
-    * zipWithIndex AND left another persisted copy in the registry
-    * (found r15 while chasing agg_winsorized_dist's sweep creep). The
-    * memo pins ONE ranked frame per distinct input, like the
-    * nearCloneClusters memo does for the CC labels' RDD lineage. */
-  private val winsRankMemo =
-    new java.util.concurrent.ConcurrentHashMap[
-      (org.apache.spark.sql.SparkSession,
-       org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Int),
-      org.apache.spark.sql.DataFrame]()
-
   private[graft] def winsorizedDistributed(
       li: org.apache.spark.sql.DataFrame, parts: Int)
       : org.apache.spark.sql.DataFrame = {
@@ -91,15 +76,18 @@ object Analytics {
     // the ranked stage feeds THREE consumers (group offsets, the rank
     // join, the bounds) and its RDD lineage (range sort + zipWithIndex)
     // would otherwise re-sort per consumer — materialize once via the
-    // registry (at 100 TB: a disk-backed level or a checkpoint table)
-    winsRankMemo.keySet.removeIf { case (sess, _, _) =>
-      sess.sparkContext.isStopped
-    }
-    val g = winsRankMemo.computeIfAbsent(
-      (li.sparkSession, li.queryExecution.analyzed.canonicalized, parts),
-      _ => graft.Caches.shared(Ranking.globalRowNumber(r0,
+    // registry (at 100 TB: a disk-backed level or a checkpoint table).
+    // Memoized on the input plan: `globalRowNumber` returns a FRESH
+    // LogicalRDD each call, so a bare `shared` per execution never
+    // canonicalized equal to the prior run's entry and re-ran the range
+    // sort + zipWithIndex every time (found r15 chasing this query's
+    // sweep creep).
+    val g = graft.Caches.memo(li.sparkSession,
+        ("winsRank", li.queryExecution.analyzed.canonicalized, parts)) {
+      graft.Caches.shared(Ranking.globalRowNumber(r0,
         Seq("flag", "l_extendedprice", "l_orderkey", "l_linenumber"),
-        parts)))
+        parts))
+    }
     val off = g.groupBy("flag")
       .agg(min(col("row_num")).as("off"), count(lit(1)).as("n"))
     val r = g.join(broadcast(off), Seq("flag"))

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
-import graft.Q
+import graft.{Caches, Q}
 
 /** Connected components over the near-duplicate candidate graph — the
   * stage after pair generation in a dedup pipeline: candidate PAIRS say
@@ -18,7 +18,7 @@ import graft.Q
   * jumping — every vertex starts as its own label, each round takes
   * the min label across itself and its neighbors, then path-halves
   * (label ← label's label), fixpoint when no label changes. Each round
-  * is two shuffle joins + one hash aggregate; `localCheckpoint` cuts
+  * is two shuffle joins + one hash aggregate; a [[Caches.cut]] cuts
   * the lineage so round N's plan doesn't re-derive rounds 1..N-1.
   * Round count = O(log diameter) thanks to the jump (propagation alone
   * pays the full diameter, and real candidate graphs chain — measured
@@ -50,12 +50,13 @@ object Graph {
     // only vertices that touch an edge can ever change label — the
     // propagation loop runs on the candidate SUBGRAPH (normally ≪ the
     // corpus: most docs have no dup candidate), and the singleton
-    // majority bypasses every round as its own cluster. `ids` is
-    // checkpointed so the bypass branch of the returned plan doesn't
-    // depend on `e` after it is unpersisted.
+    // majority bypasses every round as its own cluster. `ids` is cut,
+    // and it materializes inside the first `labelSum` job (the round-1
+    // labels semi-join it), before `e.unpersist()` below — so the
+    // bypass branch of the returned plan reads the cut blocks, not `e`.
     val ids = e.select(col("src").as("id"))
       .unionByName(e.select(col("dst").as("id")))
-      .distinct().localCheckpoint()
+      .distinct().transform(Caches.cut)
     val solo = vertices.select(col("id"))
       .join(ids, Seq("id"), "left_anti")
       .select(col("id"), col("id").as("label"))
@@ -68,14 +69,8 @@ object Graph {
       df.agg(coalesce(sum(col("label").cast("decimal(38,0)")),
         lit(java.math.BigDecimal.ZERO).cast("decimal(38,0)")))
         .head().getDecimal(0)
-    // LAZY checkpoints: the convergence probe is the action that
-    // materializes each round, so a round costs one job, not two.
-    // SER storage (VERDICT r6 perf note): the per-round label blocks
-    // were the first eviction casualty under a memory-pressured driver,
-    // and an evicted LOCAL checkpoint block is unrecoverable (lineage is
-    // truncated) — serialized blocks are 3-5× smaller, so they survive
-    // pressure that evicts the deserialized kind, and disk is the
-    // fallback either way.
+    // The convergence probe is the action that materializes each
+    // round's cut, so a round costs one job, not two.
     // Round 1 is FUSED into initialization: with identity labels,
     // propagating min over self∪neighbors IS the first round, so the
     // textbook identity-init round never runs as its own job. Its probe
@@ -86,7 +81,7 @@ object Graph {
       .select(col("id"), col("id").as("label"))
       .unionByName(sym.select(col("src").as("id"), col("dst").as("label")))
       .groupBy("id").agg(min("label").as("label"))
-      .localCheckpoint(eager = false, StorageLevel.MEMORY_AND_DISK_SER)
+      .transform(Caches.cut)
     var prevSum = labelSum(labels)
     var it = 0
     var converged = false
@@ -133,7 +128,7 @@ object Graph {
       val inner = pass(labels)
         .persist(StorageLevel.MEMORY_AND_DISK_SER)
       val next = pass(inner)
-        .localCheckpoint(eager = false, StorageLevel.MEMORY_AND_DISK_SER)
+        .transform(Caches.cut)
       val s = labelSum(next) // materializes inner (cached once) + next
       inner.unpersist()
       converged = s.compareTo(prevSum) == 0
@@ -164,18 +159,14 @@ object Graph {
     */
   def connectedComponentsStar(vertices: DataFrame, edges: DataFrame,
                               maxIter: Int = 50): (DataFrame, Int) = {
-    // LAZY SER checkpoints (the graph_reach/coreness discipline,
-    // VERDICT r10 #2): the round's stability probe is itself a full
-    // scan of both `ss` and `e` — its shuffle-map stage computes every
-    // partition, so a lazy checkpoint materializes INSIDE the probe
-    // job instead of paying a dedicated materialization job per round.
-    // r10 measured the eager variant at 2 extra jobs/round (6.34 s,
-    // 2.3× baseline); the final label join then reads the
-    // already-materialized checkpoint data for free.
-    val ser = StorageLevel.MEMORY_AND_DISK_SER
+    // The round's stability probe is itself a full scan of both `ss`
+    // and `e` — its shuffle-map stage computes every partition, so
+    // each cut materializes INSIDE the probe job (VERDICT r10 #2: an
+    // eager checkpoint cost 2 extra jobs/round, 6.34 s, 2.3× baseline);
+    // the final label join then reads the cut blocks for free.
     var e = edges.select(col("src"), col("dst"))
       .filter(col("src") =!= col("dst")).distinct()
-      .localCheckpoint(eager = false, ser)
+      .transform(Caches.cut)
     var rounds = 0
     var stable = false
     // r14: each star step used to be a groupBy-min + equi-join back on
@@ -203,12 +194,12 @@ object Graph {
         .withColumn("m", min(col("v")).over(wMin))
         .select(explode(array(col("v"), col("u"))).as("src"), col("m").as("dst"))
         .filter(col("src") =!= col("dst")).distinct()
-        .localCheckpoint(eager = false, ser)
+        .transform(Caches.cut)
       // ONE-job stability probe (was 2×exceptAll + 2 counts = ~4 jobs
       // per round): both sides are distinct edge sets, so tagging ±1 and
       // keeping groups whose tag-sum ≠ 0 yields exactly the symmetric
       // difference; isEmpty runs a single early-exit job over the two
-      // localCheckpoint'd inputs. Exact (no checksum-collision risk —
+      // cut inputs. Exact (no checksum-collision risk —
       // a false "stable" here would silently emit mid-convergence
       // labels).
       stable = ss.select(col("src"), col("dst"), lit(1L).as("t"))
@@ -304,38 +295,25 @@ object Graph {
       .select(col("a_id").as("src"), col("b_id").as("dst")))
 
   /** Near-clone cluster labels (id, label), clustered ONCE per
-    * (session, dir) and persisted: a dedup pipeline materializes the
+    * (session, dir) and shared: a dedup pipeline materializes the
     * cluster assignment once and feeds every consumer from it (min-id
     * canonicals in dedup_cc, keep-longest survivors in
     * dedup_keep_longest) — re-running the iterative CC job per consumer
-    * would multiply its multi-job cost by the consumer count. The
-    * memo key holds the session by REFERENCE, so a new session (each
-    * test suite, each driver run) recomputes from scratch; the
-    * propagation loop's localCheckpoint lineage makes the plain
-    * cache-substitution route unusable here (two runs build distinct
-    * RDD lineages, so their plans never canonicalize equal). */
-  private val ccMemo =
-    new java.util.concurrent.ConcurrentHashMap[
-      (org.apache.spark.sql.SparkSession, String), DataFrame]()
+    * would multiply its multi-job cost by the consumer count. Memoized,
+    * not just shared: the propagation loop's cut lineage makes plain
+    * cache substitution unusable here (two runs build distinct RDD
+    * lineages, so their plans never canonicalize equal). */
   private[graft] def nearCloneClusters(
-      s: org.apache.spark.sql.SparkSession, d: String): DataFrame = {
-    // evict entries of STOPPED sessions before (possibly) inserting —
-    // without this, a long-lived JVM that recycles sessions (per-suite
-    // test sessions, notebook drivers) would keep every dead session's
-    // object graph reachable through the memo keys forever
-    ccMemo.keySet.removeIf { case (sess, _) =>
-      sess.sparkContext.isStopped
-    }
-    ccMemo.computeIfAbsent((s, d), { _ =>
+      s: org.apache.spark.sql.SparkSession, d: String): DataFrame =
+    Caches.memo(s, ("nearCloneClusters", d)) {
       val (vertices, edges) = dedupGraph(s, d)
-      connectedComponents(vertices, edges).persist()
-    })
-  }
+      Caches.shared(connectedComponents(vertices, edges))
+    }
 
   /** k-core of an undirected edge list: repeatedly delete vertices of
     * degree < k (edge deletions lower neighbors' degrees, so peel to a
     * fixpoint). Each round is one hash aggregate (degrees) + two
-    * semi-joins (both endpoints survive); `localCheckpoint` cuts the
+    * semi-joins (both endpoints survive); a [[Caches.cut]] cuts the
     * per-round lineage like the CC loop. Refuses non-convergence
     * inside `maxIter` instead of returning a mid-peel state — the
     * oracle unrolls exactly `maxIter` rounds, so a converged result is
@@ -345,19 +323,19 @@ object Graph {
   def kcore(edges: DataFrame, k: Int, maxIter: Int = 8): DataFrame = {
     var sym = edges.select(col("src"), col("dst"))
       .unionByName(edges.select(col("dst").as("src"), col("src").as("dst")))
-      .localCheckpoint()
+      .transform(Caches.cut)
     var n = sym.count()
     var converged = false
     var iter = 0
     while (!converged && iter < maxIter) {
       val keep = sym.groupBy("src").agg(count(lit(1)).as("deg"))
         .filter(col("deg") >= k).select(col("src").as("id"))
-        .localCheckpoint()
+        .transform(Caches.cut)
       val next = sym
         .join(keep.select(col("id").as("src")), Seq("src"), "left_semi")
         .join(keep.select(col("id").as("dst")), Seq("dst"), "left_semi")
         .select("src", "dst")
-        .localCheckpoint()
+        .transform(Caches.cut)
       val m = next.count()
       converged = m == n
       sym = next; n = m; iter += 1
@@ -387,16 +365,14 @@ object Graph {
   def coreness(edges: DataFrame, maxIter: Int = 12): DataFrame = {
     val sym = edges.select(col("src"), col("dst"))
       .unionByName(edges.select(col("dst").as("src"), col("src").as("dst")))
-      .localCheckpoint()
+      .transform(Caches.cut)
     val w = Window.partitionBy("src").orderBy(col("nh").desc, col("dst"))
-    // lazy SER checkpoints (the graph_ppr discipline): the convergence
-    // probe right below is the first action on each round's h, so a
-    // lazy checkpoint materializes inside THAT job instead of paying a
-    // separate eager-checkpoint job per round — halves the loop's job
-    // count (~12 rounds) while still cutting lineage identically
+    // the convergence probe right below is the first action on each
+    // round's h, so its cut materializes inside THAT job — one job per
+    // round (~12 rounds), not a probe plus a materialization
     var h = sym.groupBy(col("src")).agg(count(lit(1)).as("h"))
       .select(col("src").as("id"), col("h"))
-      .localCheckpoint(eager = false, StorageLevel.MEMORY_AND_DISK_SER)
+      .transform(Caches.cut)
     var prevSum = h.agg(sum("h")).collect()(0).getLong(0)
     var converged = false
     var iter = 0
@@ -408,7 +384,7 @@ object Graph {
         .groupBy(col("src"))
         .agg(max(least(col("rn").cast("long"), col("nh"))).as("h"))
         .select(col("src").as("id"), col("h"))
-        .localCheckpoint(eager = false, StorageLevel.MEMORY_AND_DISK_SER)
+        .transform(Caches.cut)
       val s = next.agg(sum("h")).collect()(0).getLong(0)
       converged = s == prevSum
       h = next; prevSum = s; iter += 1
@@ -425,7 +401,7 @@ object Graph {
     * against the symmetrized adjacency) plus one anti-join against the
     * visited set, so per-round work is proportional to the frontier's
     * edge boundary, never the whole graph re-scanned per vertex (the
-    * textbook per-vertex shortest-path loop). `localCheckpoint` cuts
+    * textbook per-vertex shortest-path loop). A [[Caches.cut]] cuts
     * the per-round lineage (kcore precedent); an empty frontier exits
     * early — rounds after convergence are free, so a converged result
     * under `maxHops` is exact, and an UNconverged one is still
@@ -433,19 +409,16 @@ object Graph {
     * no refusal contract where kcore/ktruss do. Vertices never reached
     * are absent (left-semi semantics, not null-padded). */
   def bfs(edges: DataFrame, seeds: DataFrame, maxHops: Int): DataFrame = {
-    // lazy SER checkpoints (the graph_ppr/coreness discipline): the
-    // isEmpty probe right below is the first action on each hop's
-    // frontier, so a lazy checkpoint materializes inside THAT job
-    // instead of paying a separate eager-checkpoint job per hop;
-    // `reached` materializes inside the next hop's anti-join the same
-    // way. Cuts the loop from 3 jobs/hop to ~2 — the per-hop job
-    // constant is what run-to-run variance rides on at local scale.
-    val ser = StorageLevel.MEMORY_AND_DISK_SER
+    // the isEmpty probe right below is the first action on each hop's
+    // frontier, so its cut materializes inside THAT job; `reached`
+    // materializes inside the next hop's anti-join the same way. ~2
+    // jobs/hop instead of 3 — the per-hop job constant is what
+    // run-to-run variance rides on at local scale.
     val sym = edges.select(col("src"), col("dst"))
       .unionByName(edges.select(col("dst").as("src"), col("src").as("dst")))
-      .localCheckpoint(eager = false, ser)
+      .transform(Caches.cut)
     var reached = seeds.select(col("id"), lit(0).as("dist"))
-      .localCheckpoint(eager = false, ser)
+      .transform(Caches.cut)
     var frontier = reached.select("id")
     var hop = 0
     var done = false
@@ -455,12 +428,12 @@ object Graph {
         .join(frontier.select(col("id").as("src")), Seq("src"), "left_semi")
         .select(col("dst").as("id")).distinct()
         .join(reached, Seq("id"), "left_anti")
-        .localCheckpoint(eager = false, ser)
+        .transform(Caches.cut)
       if (next.isEmpty) done = true
       else {
         reached = reached
           .unionByName(next.select(col("id"), lit(hop).as("dist")))
-          .localCheckpoint(eager = false, ser)
+          .transform(Caches.cut)
         frontier = next
       }
     }
@@ -497,7 +470,7 @@ object Graph {
     * non-increasing. */
   def ktruss(edges: DataFrame, k: Int, maxIter: Int = 8): DataFrame = {
     require(k >= 3, s"ktruss: k must be >= 3, got $k")
-    var s = edges.select("src", "dst").distinct().localCheckpoint()
+    var s = edges.select("src", "dst").distinct().transform(Caches.cut)
     var n = s.count()
     var converged = false
     var iter = 0
@@ -505,7 +478,7 @@ object Graph {
       val next = s.join(support(s), Seq("src", "dst"))
         .filter(col("sup") >= k - 2)
         .select("src", "dst")
-        .localCheckpoint()
+        .transform(Caches.cut)
       val m = next.count()
       converged = m == n
       s = next; n = m; iter += 1
@@ -729,11 +702,10 @@ object Graph {
             .otherwise(struct(col("d1").as("dg"), col("p1").as("id")))
             .as("dstK"))
         .select(col("src"), col("dstK"), col("dstK.id").as("dst"))
-        // r14: lazy SER checkpoint (the coreness/bfs discipline) — the
-        // oriented edge list feeds THREE subtrees (both wedge arms and
-        // the closing-edge semi-join); without it each consumer re-ran
-        // the two broadcast-deg joins, tripling the plan
-        .localCheckpoint(eager = false, StorageLevel.MEMORY_AND_DISK_SER)
+        // r14: cut — the oriented edge list feeds THREE subtrees (both
+        // wedge arms and the closing-edge semi-join); without it each
+        // consumer re-ran the two broadcast-deg joins, tripling the plan
+        .transform(Caches.cut)
       // wedges at the lowest-order corner: two out-edges of src, kept
       // once per unordered pair via the SAME (degree, id) order; the
       // closing edge is oriented b→c by construction
@@ -766,7 +738,7 @@ object Graph {
     // and the query hash-oracles exactly, which no float PageRank can.
     // Scale shape: per iteration ONE shuffle join keyed on src (sym
     // and deg share the key), one hash agg on dst, one broadcast-free
-    // left join back to vertices; lazy localCheckpoints cut the
+    // left join back to vertices; cuts truncate the
     // 5-iteration lineage exactly like the CC loop. Singletons take
     // the base rank every round and skip all joins' matched paths.
     Q("graph_pagerank", {
@@ -796,10 +768,10 @@ object Graph {
       val (vertices, edges) = dedupGraph(s, d)
       val sym = edges.select(col("src"), col("dst"))
         .unionByName(edges.select(col("dst").as("src"), col("src").as("dst")))
-        .localCheckpoint(eager = false)
+        .transform(Caches.cut)
       val deg = sym.groupBy("src").agg(count(lit(1)).as("deg"))
         .withColumnRenamed("src", "did")
-        .localCheckpoint(eager = false)
+        .transform(Caches.cut)
       var r = vertices.select(col("id"), lit(1000000000000L).as("r"))
       for (_ <- 1 to 5) {
         val contrib = sym.join(r, sym("src") === r("id"))
@@ -810,7 +782,7 @@ object Graph {
             Seq("id"), "left")
           .select(col("id"), (lit(150000000000L) +
             expr("(85 * coalesce(sc, CAST(0 AS BIGINT))) div 100")).as("r"))
-          .localCheckpoint(eager = false)
+          .transform(Caches.cut)
       }
       r.select(col("id"), col("r").as("pr")).orderBy("id")
     },
@@ -961,7 +933,7 @@ object Graph {
       val e = coEdgesSrcDst(s, d) // shared cached stage (r14)
       val sym = e.unionByName(
         e.select(col("dst").as("src"), col("src").as("dst")))
-        .localCheckpoint()
+        .transform(Caches.cut)
       val part400 = graft.Tables.part(s, d)
         .filter(col("p_partkey") < 400)
         .select(col("p_partkey").as("id"), col("p_brand").as("brand"))
@@ -977,7 +949,7 @@ object Graph {
           .select(col("src").as("id"), col("a.label").as("label"))
         labels = seeds.unionByName(
           arg.join(seeds.select("id"), Seq("id"), "left_anti"))
-          .localCheckpoint()
+          .transform(Caches.cut)
       }
       part400.join(labels.select(col("id"), col("label").as("pred")),
           Seq("id"), "left")
@@ -1176,7 +1148,7 @@ object Graph {
     // label)) — a second HASH aggregate, NOT a per-node window, so a
     // celebrity node's million-label vote list still partial-aggregates
     // map-side; isolated vertices never enter any join and keep their
-    // own id via the left-join coalesce. Lazy localCheckpoints cut the
+    // own id via the left-join coalesce. Cuts truncate the
     // 4-round lineage (the graph_pagerank pattern). The oracle unrolls
     // the same 4 rounds as MATERIALIZED CTEs with an independent
     // row_number-window argmax formulation.
@@ -1360,7 +1332,7 @@ object Graph {
     // weighted walk). Nodes never reached in 4 rounds hold rank 0 and
     // are dropped (absent ≡ unreachable by contract, the graph_reach
     // precedent). Per round: one shuffle join keyed on src + one hash
-    // agg on dst; lazy SER checkpoints cut the lineage.
+    // agg on dst; cuts truncate the lineage.
     Q("graph_ppr", {
       val iters = (1 to 4).map { i =>
         s"""r$i AS (
@@ -1399,12 +1371,12 @@ object Graph {
       val e = coEdgesWeightedSrcDst(s, d) // shared cached stage (r15)
       val sym = e.unionByName(
           e.select(col("dst").as("src"), col("src").as("dst"), col("w")))
-        .localCheckpoint(eager = false)
+        .transform(Caches.cut)
       val v = sym.select(col("src").as("id")).distinct()
-        .localCheckpoint(eager = false)
+        .transform(Caches.cut)
       val st = sym.groupBy("src").agg(sum("w").as("s"))
         .withColumnRenamed("src", "sid")
-        .localCheckpoint(eager = false)
+        .transform(Caches.cut)
       val seedBase =
         when(col("id") % 50 === 0, lit(150000000000L)).otherwise(lit(0L))
       var r = v.select(col("id"),
@@ -1418,8 +1390,7 @@ object Graph {
             Seq("id"), "left")
           .select(col("id"), (seedBase +
             expr("(85 * coalesce(sc, CAST(0 AS BIGINT))) div 100")).as("r"))
-          .localCheckpoint(eager = false,
-            org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+          .transform(Caches.cut)
       }
       r.filter(col("r") > 0)
         .select(col("id"), col("r").as("ppr")).orderBy("id")
@@ -1491,7 +1462,7 @@ object Graph {
         .select(col("src"), col("dst"),
           (row_number().over(wAdj) - 1).cast("long").as("idx"),
           count(lit(1)).over(Window.partitionBy("src")).as("deg"))
-        .localCheckpoint(eager = false)
+        .transform(Caches.cut)
       var frontier = adj.select(col("src")).distinct()
         .filter(col("src") % 7 === 0)
         .select(col("src").as("start"), col("src").as("cur"))
@@ -1506,11 +1477,10 @@ object Graph {
             col("idx") === h % col("deg"))
           .select(col("start"), col("dst").as("cur"))
           // r15 (VERDICT r14 #3, guide §2.4): each frontier feeds BOTH
-          // the next step and its own ledger branch — uncheckpointed,
+          // the next step and its own ledger branch — uncut,
           // branch t of the final union re-derived the whole
           // frontier₁..ₜ join chain, O(k²) joins for a k-step walk
-          .localCheckpoint(eager = false,
-            org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+          .transform(Caches.cut)
         steps += frontier.select(col("start"), lit(t).as("step"),
           col("cur").as("node"))
       }
@@ -1535,7 +1505,7 @@ object Graph {
       .unionByName(e.select(col("p2").as("src"), col("p1").as("dst")))
     val v = graft.Tables.lineitem(s, d).filter(col("l_partkey") < 400)
       .select(col("l_partkey").as("id")).distinct()
-      .localCheckpoint(eager = false)
+      .transform(Caches.cut)
     (e, v, sym)
   }
 
@@ -1544,7 +1514,7 @@ object Graph {
   private[graft] def lpaLabels(s: org.apache.spark.sql.SparkSession,
       d: String): DataFrame = {
     val (_, v, sym0) = lpaGraph(s, d)
-    val sym = sym0.localCheckpoint(eager = false)
+    val sym = Caches.cut(sym0)
     var labels = v.select(col("id"), col("id").as("label"))
     for (_ <- 1 to 4) {
       val votes = sym.join(labels, sym("dst") === labels("id"))
@@ -1557,7 +1527,7 @@ object Graph {
         .select(col("vid").as("id"), col("m.l").as("nl"))
       labels = v.join(top, Seq("id"), "left")
         .select(col("id"), coalesce(col("nl"), col("id")).as("label"))
-        .localCheckpoint(eager = false)
+        .transform(Caches.cut)
     }
     labels
   }

@@ -107,17 +107,13 @@ object TextOps {
     * specs: originals live below it, first-tier plants in
     * [off, 2·off), second-tier plants in [2·off, 3·off).
     * Memoized per (session, dir) — one parquet-stat max per corpus. */
-  private val offMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), Long]()
-  private[graft] def cloneOff(s: SparkSession, d: String): Long = {
-    offMemo.keySet.removeIf { case (sess, _) => sess.sparkContext.isStopped }
-    offMemo.computeIfAbsent((s, d), { _ =>
+  private[graft] def cloneOff(s: SparkSession, d: String): Long =
+    graft.Caches.memo(s, ("cloneOff", d)) {
       val mx = Tables.documents(s, d).agg(max("doc_id")).head.getLong(0)
       var off = 10L
       while (off <= mx) off *= 10L
       off
-    })
-  }
+    }
   /** SQL mirror of [[cloneOff]] — the same integer, derived from the
     * same table, as a scalar subquery the oracles embed. Digit count
     * (not log10: float log of an exact power of ten can land a hair
@@ -182,12 +178,10 @@ object TextOps {
             xxhash64(concat_ws(" ", slice(t, i, lit(8))))
               .as("gram")))), 1)).as("g"))
       .select(col("doc_id"), col("g.i").as("i"), col("g.gram").as("gram"))
-      // r14: lazy SER checkpoint — `g` feeds BOTH the duplicate-gram
-      // agg and the occurrence join; uncheckpointed, the tokenize →
-      // gram-explode → xxhash64 stage (the kernel's CPU-heavy pass)
-      // ran twice per execution
-      .localCheckpoint(eager = false,
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+      // r14: cut — `g` feeds BOTH the duplicate-gram agg and the
+      // occurrence join; uncut, the tokenize → gram-explode → xxhash64
+      // stage (the kernel's CPU-heavy pass) ran twice per execution
+      .transform(graft.Caches.cut)
     val dup = g.groupBy("gram").agg(count(lit(1)).as("c"))
       .filter(col("c") >= 2).select("gram")
     val occ = g.join(dup, Seq("gram"))
@@ -579,7 +573,7 @@ object TextOps {
     * txt_bpe_encode aggregates. Memoized like [[Graph]]'s CC clusters:
     * both txt_bpe_* queries consume the same fit, and re-running the
     * 4-round iterative job per consumer would double its multi-job
-    * cost. Each round's state and rule get a LAZY localCheckpoint (the
+    * cost. Each round's state and rule get a [[graft.Caches.cut]] (the
     * CC loop's lineage discipline): every round reads st{i-1} several
     * times (pair scan, match scan, rewrite) and embeds best{i}, so a
     * pure lazy plan both re-executes ancestors multiplicatively AND
@@ -588,33 +582,26 @@ object TextOps {
     * alone doesn't help analysis cost (the plan still nests); the
     * checkpoint truncates it to a leaf. Vocab-sized frames: the memory
     * cost is the token state, never the corpus. */
-  private val bpeMemo =
-    new java.util.concurrent.ConcurrentHashMap[
-      (org.apache.spark.sql.SparkSession, String), (DataFrame, DataFrame)]()
   private def bpeFit(s: org.apache.spark.sql.SparkSession,
-      d: String): (DataFrame, DataFrame) = {
-    bpeMemo.keySet.removeIf { case (sess, _) => sess.sparkContext.isStopped }
-    bpeMemo.computeIfAbsent((s, d), { _ =>
-      val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER
+      d: String): (DataFrame, DataFrame) =
+    graft.Caches.memo(s, ("bpeFit", d)) {
       val vocab = Tables.documents(s, d)
         .select(explode(toks(col("text"))).as("word"))
         .groupBy("word").agg(count(lit(1)).as("w"))
-      var st = vocab
+      var st = graft.Caches.cut(vocab
         .select(col("word"), col("w"),
           explode(sequence(lit(1L), length(col("word")).cast("long")))
             .as("pos"))
-        .withColumn("tok", expr("substring(word, CAST(pos AS INT), 1)"))
-        .localCheckpoint(eager = false, lvl)
+        .withColumn("tok", expr("substring(word, CAST(pos AS INT), 1)")))
       val bests = (1 to 4).map { i =>
         val (best0, next) = bpeRound(st)
-        val best = best0.localCheckpoint(eager = false, lvl)
-        st = next.localCheckpoint(eager = false, lvl)
+        val best = graft.Caches.cut(best0)
+        st = graft.Caches.cut(next)
         best.select(lit(i.toLong).as("rank"), col("l"), col("r"),
           col("c").as("pair_count"))
       }
       (bests.reduce(_ unionByName _), st)
-    })
-  }
+    }
 
   // ── shared SimHash pipeline stages (see dedup_simhash_pairs) ─────────
 

@@ -207,15 +207,14 @@ object Vectors {
     * partition-prunable downstream as every IVF variant here. */
   def ivfDataFitTopK(s: SparkSession, d: String, k: Int, nlist: Int,
       nprobe: Int, steps: Int): DataFrame = {
-    // r14: lazy SER checkpoint — `base` (scan + norm + per-element
-    // quantization) feeds the seed draw, one assignment pass per Lloyd
-    // step and the final assignment; uncheckpointed it recomputed per
-    // consumer (steps + 2 scans of the corpus)
+    // r14: cut — `base` (scan + norm + per-element quantization) feeds
+    // the seed draw, one assignment pass per Lloyd step and the final
+    // assignment; uncut it recomputed per consumer (steps + 2 scans of
+    // the corpus)
     val base = normed(s, d).withColumn("xq",
         transform(col("embedding"),
           x => floor(x.cast("double") * 1000).cast("long")))
-      .localCheckpoint(eager = false,
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+      .transform(graft.Caches.cut)
     val seeds = base
       .select(col("vec_id"), col("xq"),
         md5(concat(lit("ivfseed#"), col("vec_id").cast("string"))).as("h"))
@@ -1364,15 +1363,14 @@ object Vectors {
          |FROM clus c LEFT JOIN assigned a ON a.vec_id = c.vec_id
          |ORDER BY c.vec_id""".stripMargin) { (s, d) =>
       // r14: the cell assignment feeds four subtrees (both pair sides,
-      // the singleton anti-join, the final cell attach) — checkpoint it
-      // once; connectivity then resolves CELL-LOCALLY (see
+      // the singleton anti-join, the final cell attach) — cut it once;
+      // connectivity then resolves CELL-LOCALLY (see
       // [[cellLocalComponents]]: in-cell pairs can't cross cells, so
       // one cell-keyed shuffle replaces the iterative CC loop), and
       // docs with no pair partner come back as their own singleton
       // cluster exactly as Graph.connectedComponents' solo branch did.
       val assigned = semanticAssigned(s, d, FixedNList)
-        .localCheckpoint(eager = false,
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+        .transform(graft.Caches.cut)
       val paired = cellLocalComponents(semanticPairs(assigned))
       val solo = assigned.select(col("vec_id").as("id"))
         .join(paired, Seq("id"), "left_anti")

@@ -14,6 +14,16 @@ class CachesSpec extends SparkSuite {
     spark.sharedState.cacheManager.lookupCachedData(
       df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]).nonEmpty
 
+  /** agg_winsorized_dist's plan reads a cached stage (its memoized rank
+    * stage — the query has no other shared stage). */
+  private def winsorizedReadsCache(): Boolean = {
+    val df = SparkEntry.queries("agg_winsorized_dist")(spark, SparkSuite.Sf0001)
+    df.count()
+    df.queryExecution.withCachedData.collectFirst {
+      case _: org.apache.spark.sql.execution.columnar.InMemoryRelation => ()
+    }.nonEmpty
+  }
+
   test("queries register their shared stages; releaseAll uncaches them") {
     val before = Caches.registered
     // a query whose shared shingle stage goes through the registry
@@ -55,5 +65,74 @@ class CachesSpec extends SparkSuite {
     Caches.releaseAll()
     assert(!cached(a) && !cached(b),
       "duplicate registration left the plan cached after release")
+  }
+
+  test("releaseAll drops the memoized winsorized rank stage; the next " +
+      "run caches and registers it again") {
+    Caches.releaseAll()
+    assert(winsorizedReadsCache(), "first run did not read its rank stage")
+    Caches.releaseAll()
+    assert(winsorizedReadsCache(),
+      "after releaseAll the memo served an unpersisted rank stage")
+    assert(Caches.registered == 1, "rank stage was not registered again")
+  }
+
+  test("enforceBudget drops the memoized winsorized rank stage too") {
+    Caches.releaseAll()
+    assert(winsorizedReadsCache())
+    assert(Caches.enforceBudget(spark, 0L) >= 1)
+    assert(Caches.registered == 0)
+    assert(winsorizedReadsCache(),
+      "after eviction the memo served an unpersisted rank stage")
+    assert(Caches.registered == 1)
+  }
+
+  test("releaseAll uncaches nearCloneClusters; the next call rebuilds it") {
+    val a = operators.Graph.nearCloneClusters(spark, SparkSuite.Sf0001)
+    a.count()
+    assert(cached(a))
+    Caches.releaseAll()
+    assert(!cached(a), "releaseAll left the CC labels cached")
+    val b = operators.Graph.nearCloneClusters(spark, SparkSuite.Sf0001)
+    assert(!(b eq a), "memo served the released frame")
+    assert(b.storageLevel.useMemory && cached(b),
+      "rebuilt CC labels are not persisted")
+  }
+
+  test("shared registers two equal plans once") {
+    Caches.releaseAll()
+    def mk() = Tables.events(spark, SparkSuite.Sf0001)
+      .select(col("event_id")).distinct()
+    val before = Caches.registered
+    Caches.shared(mk())
+    Caches.shared(mk())
+    assert(Caches.registered == before + 1)
+    Caches.releaseAll()
+  }
+
+  test("a memo build may call memo again") {
+    val outer = Caches.memo(spark, "caches-spec-outer") {
+      Caches.memo(spark, "caches-spec-inner")(1) + 1
+    }
+    assert(outer == 2)
+    assert(Caches.memo(spark, "caches-spec-inner")(99) == 1)
+    assert(Caches.memo(spark, "caches-spec-outer")(99) == 2)
+  }
+
+  test("operators and streaming materialize only through Caches") {
+    val dirs = Seq("src/main/scala/graft/operators",
+      "src/main/scala/graft/streaming").map(new java.io.File(_))
+    dirs.foreach(d => assert(d.isDirectory, s"missing source dir $d"))
+    val offenders = for {
+      dir <- dirs
+      f <- dir.listFiles().toSeq.filter(_.getName.endsWith(".scala"))
+      (line, i) <- java.nio.file.Files.readAllLines(f.toPath)
+        .toArray(Array.empty[String]).toSeq.zipWithIndex
+      if line.contains("localCheckpoint(") ||
+        line.contains("ConcurrentHashMap")
+    } yield s"${f.getName}:${i + 1}: ${line.trim}"
+    assert(offenders.isEmpty,
+      "materialize through graft.Caches (shared / memo / cut):\n" +
+        offenders.mkString("\n"))
   }
 }
