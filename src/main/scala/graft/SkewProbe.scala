@@ -25,7 +25,8 @@ import org.apache.spark.sql.functions._
   *   - rank:     global row_number over events (value, event_id) — the
   *               partition-less Window (one task holds the corpus) vs
   *               [[operators.Ranking.globalRowNumber]]'s range-
-  *               partition + zipWithIndex.
+  *               partition + zipWithIndex, sized by this probe's
+  *               session (shuffle partitions = cpus, AQE coalescing).
   *
   * Prints ONE JSON line and writes it to SPARK_GRAFT_PROBE_OUT
   * (default /root/repo/SKEWPROBE.json).
@@ -114,8 +115,7 @@ object SkewProbe {
         .agg(rankChecksum).head.getLong(0)
     }
     def rankDist(): Long =
-      operators.Ranking.globalRowNumber(
-          ranked, Seq("value", "event_id"), cpus.toInt * 4)
+      operators.Ranking.globalRowNumber(ranked, Seq("value", "event_id"))
         .withColumn("rn", col("row_num"))
         .agg(rankChecksum).head.getLong(0)
 

@@ -61,50 +61,43 @@ object Analytics {
     * kernel partitions by l_returnflag: 3 groups is its skew ceiling
     * (at 100 TB one task would sort a third of the corpus). Here the
     * per-group rank is recovered from a GLOBAL rank over the composite
-    * (flag, value, tiebreak) key — Ranking.globalRowNumber's
-    * range-partition + zipWithIndex, bounded at corpus/numPartitions
-    * rows per task regardless of group cardinality — minus each
-    * group's first global rank (a groups-sized broadcast). No Window
-    * node anywhere in the plan; ScaleSpec pins the single-giant-group
-    * case against a local exact computation. */
+    * (flag, value, tiebreak) key by [[Ranking.withGroupRank]]. No
+    * Window node anywhere in the plan; ScaleSpec pins the
+    * single-giant-group case against a local exact computation.
+    *
+    * Bounds and clamped sum come from ONE aggregate over the ranks:
+    * with k_lo = ⌈0.05·n⌉, k_hi = ⌈0.95·n⌉ and lo, hi the x at those
+    * ranks, Σclamp(x) = (k_lo − 1)·lo + Σ_{k_lo ≤ rk ≤ k_hi} x + (n − k_hi)·hi,
+    * because x is non-decreasing in rk within a flag (the rank key
+    * leads with the value; the decimal cast is monotone). The sum is
+    * DECIMAL, so the identity is exact and the one double cast sees
+    * the decimal the clamp-then-sum form produced. */
   private[graft] def winsorizedDistributed(
-      li: org.apache.spark.sql.DataFrame, parts: Int)
-      : org.apache.spark.sql.DataFrame = {
+      li: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     val r0 = li.select(col("l_returnflag").as("flag"),
       col("l_extendedprice").cast("decimal(12,4)").as("x"),
       col("l_extendedprice"), col("l_orderkey"), col("l_linenumber"))
-    // the ranked stage feeds THREE consumers (group offsets, the rank
-    // join, the bounds) and its RDD lineage (range sort + zipWithIndex)
-    // would otherwise re-sort per consumer — materialize once via the
-    // registry (at 100 TB: a disk-backed level or a checkpoint table).
-    // Memoized on the input plan: `globalRowNumber` returns a FRESH
-    // LogicalRDD each call, so a bare `shared` per execution never
-    // canonicalized equal to the prior run's entry and re-ran the range
-    // sort + zipWithIndex every time (found r15 chasing this query's
-    // sweep creep).
+    // cached once per input plan, not per call: `globalRowNumber`
+    // returns a fresh LogicalRDD each call, which never canonicalizes
+    // equal to a prior run's `shared` entry
     val g = graft.Caches.memo(li.sparkSession,
-        ("winsRank", li.queryExecution.analyzed.canonicalized, parts)) {
+        ("winsRank", li.queryExecution.analyzed.canonicalized)) {
       graft.Caches.shared(Ranking.globalRowNumber(r0,
-        Seq("flag", "l_extendedprice", "l_orderkey", "l_linenumber"),
-        parts))
+        Seq("flag", "l_extendedprice", "l_orderkey", "l_linenumber"))
+        .select("flag", "x", "row_num"))
     }
-    val off = g.groupBy("flag")
-      .agg(min(col("row_num")).as("off"), count(lit(1)).as("n"))
-    val r = g.join(broadcast(off), Seq("flag"))
-      .withColumn("rk", col("row_num") - col("off") + lit(1L))
-    val b = r.groupBy("flag").agg(
-      min(when(col("rk") === ceil(lit(0.05) * col("n")).cast("long"),
-        col("x"))).as("lo"),
-      min(when(col("rk") === ceil(lit(0.95) * col("n")).cast("long"),
-        col("x"))).as("hi"))
-    r.join(broadcast(b), Seq("flag"))
-      .groupBy("flag", "lo", "hi")
-      .agg(count(lit(1)).as("n"),
-        (sum(least(greatest(col("x"), col("lo")), col("hi")))
-          .cast("double") / count(lit(1))).as("wins_mean"))
+    val kLo = ceil(lit(0.05) * col("n")).cast("long")
+    val kHi = ceil(lit(0.95) * col("n")).cast("long")
+    Ranking.withGroupRank(g, "flag")
+      .groupBy("flag")
+      .agg(max(col("n")).as("n"),
+        min(when(col("rk") === kLo, col("x"))).as("lo"),
+        min(when(col("rk") === kHi, col("x"))).as("hi"),
+        sum(when(col("rk").between(kLo, kHi), col("x"))).as("mid"))
       .select(col("flag"), col("n"),
         col("lo").cast("double").as("lo"), col("hi").cast("double").as("hi"),
-        col("wins_mean"))
+        (((kLo - 1) * col("lo") + col("mid") + (col("n") - kHi) * col("hi"))
+          .cast("double") / col("n")).as("wins_mean"))
       .orderBy("flag")
   }
 
@@ -1076,7 +1069,7 @@ object Analytics {
     // rows, same oracle, zero Window nodes — exact order statistics
     // that survive one corpus-scale group.
     Q("agg_winsorized_dist", winsorizedSql) { (s, d) =>
-      winsorizedDistributed(Tables.lineitem(s, d), 32)
+      winsorizedDistributed(Tables.lineitem(s, d))
     },
 
     // ── trailing-window anomaly detection ──────────────────────────────
@@ -1323,9 +1316,8 @@ object Analytics {
     // is DuckDB's NATIVE percent_rank()/cume_dist() over a global ORDER
     // BY; the Spark side refuses the equivalent partition-less window
     // (the one-task scale-killer snk_api_batch already evicted) and
-    // builds the same numbers distributed: a range-partitioned global
-    // row number (Ranking.globalRowNumber — two parallel linear
-    // passes), tie-merged into rank/rank_le by a window PARTITIONED on
+    // builds the same numbers distributed: Ranking.globalRowNumber,
+    // tie-merged into rank/rank_le by a window PARTITIONED on
     // the spend value, then pure rank arithmetic against a broadcast
     // 1-row total. Exact parity: (rank-1)/(n-1) and rank_le/n are one
     // integer-fed double division each, the very formulas the native
@@ -1342,8 +1334,7 @@ object Analytics {
       val spend = Tables.orders(s, d)
         .groupBy("o_custkey")
         .agg(sum(col("o_totalprice").cast("decimal(14,2)")).as("s"))
-      val shuffle = s.conf.get("spark.sql.shuffle.partitions").toInt
-      val rn = Ranking.globalRowNumber(spend, Seq("s", "o_custkey"), shuffle)
+      val rn = Ranking.globalRowNumber(spend, Seq("s", "o_custkey"))
       val tot = spend.agg(count(lit(1)).as("n"))
       val ws = Window.partitionBy("s")
       rn.crossJoin(broadcast(tot))
@@ -2193,28 +2184,25 @@ object Analytics {
     // precedent), ZERO Window nodes — per-day ranks recovered from one
     // GLOBAL rank over the composite (day, value, event_id) key
     // (Ranking.globalRowNumber: range-partition + zipWithIndex, two
-    // linear passes, ≤ corpus/numPartitions rows per task) minus each
-    // day's first global rank (a days-sized broadcast). This is the
-    // form that survives a corpus-scale DAY — the day-partitioned
-    // window sorts an entire day in one task; the global-rank route
-    // never materializes a partition bigger than corpus/parts
-    // regardless of how skewed the days are (plan-guarded windowless).
+    // linear passes) turned into per-day ranks by
+    // Ranking.withGroupRank. This is the form that survives a
+    // corpus-scale DAY — the day-partitioned window sorts an entire
+    // day in one task; the global-rank route bounds every task by the
+    // session's shuffle partitions regardless of how skewed the days
+    // are (plan-guarded windowless).
     Q("ts_daily_pct_dist", dailyPctOracleSql) { (s, d) =>
       val e = Tables.events(s, d)
         .select(expr("unix_micros(ts) div 86400000000").as("day"),
           col("value"), col("event_id"))
-      val g = Ranking.globalRowNumber(e, Seq("day", "value", "event_id"), 32)
-      val off = g.groupBy("day")
-        .agg(min(col("row_num")).as("off"), count(lit(1)).as("n"))
-      g.join(broadcast(off), Seq("day"))
-        .withColumn("rn", col("row_num") - col("off") + lit(1L))
+      Ranking.withGroupRank(
+          Ranking.globalRowNumber(e, Seq("day", "value", "event_id")), "day")
         .groupBy("day")
         .agg(max("n").cast("long").as("n"),
-          min(when(col("rn") === expr("(n * 50 + 99) div 100"),
+          min(when(col("rk") === expr("(n * 50 + 99) div 100"),
             col("value"))).as("p50"),
-          min(when(col("rn") === expr("(n * 95 + 99) div 100"),
+          min(when(col("rk") === expr("(n * 95 + 99) div 100"),
             col("value"))).as("p95"),
-          min(when(col("rn") === expr("(n * 99 + 99) div 100"),
+          min(when(col("rk") === expr("(n * 99 + 99) div 100"),
             col("value"))).as("p99"))
         .orderBy("day")
     },
@@ -2230,9 +2218,8 @@ object Analytics {
     // order — pure integer arithmetic, identical in both engines.
     // Scale shape: one user_id aggregate over events (map-side
     // combined), then three global ranks of the USERS-sized table via
-    // Ranking.globalRowNumber (range-partition + zipWithIndex — the
-    // win_pctrank discipline; no partition-less window anywhere), a
-    // broadcast 1-row (n, anchor) total, and rank arithmetic. Recency
+    // Ranking.globalRowNumber, a broadcast 1-row (n, anchor) total,
+    // and rank arithmetic. Recency
     // anchors to the corpus's own last active day, so the query is a
     // pure function of the data.
     Q("evt_rfm",
@@ -2281,10 +2268,9 @@ object Analytics {
           datediff(col("anchor"), col("last_day")).cast("long"))
         .withColumn("neg_f", -col("frequency"))
         .withColumn("neg_m", -col("monetary")))
-      val shuffle = s.conf.get("spark.sql.shuffle.partitions").toInt
       def ranked(df: org.apache.spark.sql.DataFrame, keys: Seq[String],
           as: String) =
-        Ranking.globalRowNumber(df, keys, shuffle)
+        Ranking.globalRowNumber(df, keys)
           .withColumnRenamed("row_num", as)
       val r = ranked(ranked(ranked(base,
         Seq("recency_days", "user_id"), "r_rk"),

@@ -33,9 +33,8 @@ object Api {
     // Batched-sink batch assignment (/root/reference/src/apiFunctions.ts:58-80
     // posts docs in batches; the sink's deterministic global batching as
     // a checkable query: batch = rank/50 over the total order). The
-    // global rank comes from Ranking.globalRowNumber (range-partition +
-    // per-partition offsets), NOT a partition-less window — identical
-    // output, no single-task global sort (VERDICT r1 "What's wrong" #2).
+    // global rank comes from Ranking.globalRowNumber, NOT a
+    // partition-less window — identical output, no single-task sort.
     Q("snk_api_batch", Oracle.withCtes(
       """SELECT batch_id, COUNT(*) AS n, MIN(id) AS first_id, MAX(id) AS last_id
         |FROM (
@@ -45,7 +44,7 @@ object Api {
       (s, d) =>
         val filtered = graft.Tables.charge(s, d)
           .filter(col("customerId") === "42").select("id")
-        Ranking.globalRowNumber(filtered, "id", numPartitions = 8)
+        Ranking.globalRowNumber(filtered, "id")
           .withColumn("batch_id",
             floor((col("row_num") - 1) / 50).cast("int"))
           .groupBy("batch_id")

@@ -298,8 +298,7 @@ object Insights {
 
     // ntile(10) over all customers by spend. The textbook form is a
     // no-PARTITION window — one task sorts every customer at 100 TB.
-    // Here the global rank comes from Ranking.globalRowNumber (range
-    // repartition + zipWithIndex: fully parallel, deterministic), and
+    // Here the global rank comes from Ranking.globalRowNumber, and
     // ntile's larger-buckets-first arithmetic is recovered from (rank,
     // n) in closed form, so the oracle can use native ntile() while the
     // engine never materializes a single-task sort. n arrives via a
@@ -323,7 +322,7 @@ object Insights {
       val sp = Tables.orders(s, d)
         .groupBy(col("o_custkey").as("custkey"))
         .agg(sum(col("o_totalprice").cast(Tables.M)).as("spend"))
-      val ranked = Ranking.globalRowNumber(sp, Seq("spend", "custkey"), 32)
+      val ranked = Ranking.globalRowNumber(sp, Seq("spend", "custkey"))
       val cnt = sp.agg(count(lit(1)).as("n"))
       ranked.crossJoin(broadcast(cnt))
         // SQL ntile(k): first n%k buckets hold n div k + 1 rows, the
@@ -1553,7 +1552,7 @@ object Insights {
         .agg((sum(col("o_totalprice").cast(Tables.M)) * 10000)
           .cast("long").as("cents"))
       val ranked = Ranking.globalRowNumber(
-        sp.withColumn("neg", -col("cents")), Seq("neg", "custkey"), 8)
+        sp.withColumn("neg", -col("cents")), Seq("neg", "custkey"))
       val tot = sp.agg(count(lit(1)).as("n"), sum("cents").as("tc"))
       val dec = ranked.crossJoin(broadcast(tot))
         .select(expr("(row_num - 1) * 10 div n + 1").as("decile"),
@@ -2555,9 +2554,8 @@ object Insights {
     // exact int64s. The $200 threshold keeps both classes populated at
     // every SF (y > 0 is degenerate: every fixture user purchases
     // post-period). Scale shape: the global score ordering rides
-    // Ranking.globalRowNumber (range partition + zipWithIndex — no
-    // partition-less window over users), tie-group stats are a hash agg
-    // on the score, and the ledger folds to one row.
+    // Ranking.globalRowNumber, tie-group stats are a hash agg on the
+    // score, and the ledger folds to one row.
     Q("evt_score_auc",
       s"""WITH $causalUsersSql, rk AS (
          |  SELECT user_id, x, CASE WHEN y > 2000000 THEN 1 ELSE 0 END AS pos,
@@ -2582,7 +2580,7 @@ object Insights {
       val u = causalUsersShared(s, d)
         .select(col("user_id"), col("x"),
           when(col("y") > 2000000L, 1L).otherwise(0L).as("pos"))
-      val ranked = Ranking.globalRowNumber(u, Seq("x", "user_id"), 32)
+      val ranked = Ranking.globalRowNumber(u, Seq("x", "user_id"))
       val xs = ranked.groupBy("x")
         .agg(min("row_num").as("rmin"), max("row_num").as("rmax"))
       val tot = ranked.filter(col("pos") === 1)
@@ -2740,7 +2738,7 @@ object Insights {
       val u = causalUsersShared(s, d)
         .select(col("user_id"), col("x"),
           when(col("y") > 2000000L, 1L).otherwise(0L).as("pos"))
-      val ranked = Ranking.globalRowNumber(u, Seq("x", "user_id"), 32)
+      val ranked = Ranking.globalRowNumber(u, Seq("x", "user_id"))
       val tot = ranked.agg(count(lit(1)).as("n"))
       ranked.crossJoin(broadcast(tot))
         .select(expr("CAST(((row_num - 1) * 10) div n + 1 AS INT)")
@@ -2808,7 +2806,7 @@ object Insights {
       import org.apache.spark.sql.expressions.Window
       val u = causalUsersShared(s, d).select(col("user_id"), col("grp"),
         col("y"), (-col("x")).as("xneg")) // xneg asc ≡ x desc
-      val ranked = Ranking.globalRowNumber(u, Seq("xneg", "user_id"), 32)
+      val ranked = Ranking.globalRowNumber(u, Seq("xneg", "user_id"))
       val tot = ranked.agg(count(lit(1)).as("n"))
       val g = ranked.crossJoin(broadcast(tot))
         .select(expr("CAST(((row_num - 1) * 10) div n + 1 AS INT)")

@@ -71,12 +71,10 @@ object Layout {
     // pruning. The z-layout bounds BOTH dimensions per block, so both
     // probes prune; the customer sort prunes only its own dimension —
     // the day probe degenerates to a full scan. Block ranks come from
-    // Ranking.globalRowNumber (range-partition + zipWithIndex — no
-    // partition-less window, the win_pctrank discipline); stats are
-    // one hash agg per layout; the final 4-row matrix is exact
-    // integers. The oracle replays both layouts with window
-    // row_numbers — engine-identical because the (key, o_orderkey)
-    // order tuple is unique.
+    // Ranking.globalRowNumber; stats are one hash agg per layout; the
+    // final 4-row matrix is exact integers. The oracle replays both
+    // layouts with window row_numbers — engine-identical because the
+    // (key, o_orderkey) order tuple is unique.
     Q("layout_zorder_prune", {
       val day = "date_diff('day', DATE '1995-01-01', CAST(o_orderdate AS DATE))"
       s"""WITH base AS (
@@ -126,7 +124,7 @@ object Layout {
           day.cast("long").bitwiseAND(lit(65535L)).as("day16"))
         .withColumn("zkey", zkey(col("cust16"), col("day16")))
       def blocks(keys: Seq[String], layout: String) =
-        Ranking.globalRowNumber(base, keys :+ "o_orderkey", 32)
+        Ranking.globalRowNumber(base, keys :+ "o_orderkey")
           .select(lit(layout).as("layout"),
             expr("(row_num - 1) div 256").as("blk"),
             col("cust16"), col("day16"))

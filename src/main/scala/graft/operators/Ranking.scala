@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{broadcast, col, count, lit, min}
 import org.apache.spark.sql.types.LongType
 
 /** Scale-safe global ordering primitives.
@@ -14,26 +14,41 @@ import org.apache.spark.sql.types.LongType
   * `zipWithIndex` does exactly that offset computation: one lightweight
   * count pass over the partitions, then a fully parallel index pass —
   * two linear scans, no single-task stage, deterministic output
-  * identical to the global window.
+  * identical to the global window. The range exchange takes no count:
+  * the session's `spark.sql.shuffle.partitions` bounds a task at about
+  * corpus/shufflePartitions rows, and AQE coalesces neighbouring
+  * ranges to the shuffled bytes (a tiny input runs as one task, by
+  * design). Coalesced ranges stay contiguous and are sorted after the
+  * coalesce, so the ranks are the same for any partition count.
   */
 object Ranking {
 
   /** Global 1-based row number ordered by `key` (which must be unique
     * for a deterministic result), appended as column `row_num`. */
-  def globalRowNumber(df: DataFrame, key: String,
-      numPartitions: Int): DataFrame =
-    globalRowNumber(df, Seq(key), numPartitions)
+  def globalRowNumber(df: DataFrame, key: String): DataFrame =
+    globalRowNumber(df, Seq(key))
 
   /** Composite-key form: ordered by `keys` lexicographically; the TUPLE
     * must be unique for a deterministic result. */
-  def globalRowNumber(df: DataFrame, keys: Seq[String],
-      numPartitions: Int): DataFrame = {
+  def globalRowNumber(df: DataFrame, keys: Seq[String]): DataFrame = {
     val spark = df.sparkSession
-    val ranged = df.repartitionByRange(numPartitions, keys.map(col): _*)
+    val ranked = df.repartitionByRange(keys.map(col): _*)
       .sortWithinPartitions(keys.head, keys.tail: _*)
-    val indexed = ranged.rdd.zipWithIndex().map { case (r, i) =>
+    val indexed = ranked.rdd.zipWithIndex().map { case (r, i) =>
       Row.fromSeq(r.toSeq :+ (i + 1L))
     }
-    spark.createDataFrame(indexed, ranged.schema.add("row_num", LongType))
+    spark.createDataFrame(indexed, ranked.schema.add("row_num", LongType))
+  }
+
+  /** Adds `rk` (1-based rank within `group`) and `n` (group size) to a
+    * [[globalRowNumber]] output whose keys lead with `group`: a group's
+    * global ranks are contiguous, so its first rank and size (one
+    * broadcast row per group) suffice — no Window, however big the group. */
+  def withGroupRank(ranked: DataFrame, group: String): DataFrame = {
+    val first = ranked.groupBy(group)
+      .agg(min(col("row_num")).as("first_rn"), count(lit(1)).as("n"))
+    ranked.join(broadcast(first), Seq(group))
+      .withColumn("rk", col("row_num") - col("first_rn") + lit(1L))
+      .drop("first_rn")
   }
 }

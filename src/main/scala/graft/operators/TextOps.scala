@@ -896,7 +896,7 @@ object TextOps {
         .select(explode(toks(col("text"))).as("term"))
         .groupBy("term").agg(count(lit(1)).as("n"))
       val vocab = Ranking.globalRowNumber(
-          wc.withColumn("neg_n", -col("n")), Seq("neg_n", "term"), 8)
+          wc.withColumn("neg_n", -col("n")), Seq("neg_n", "term"))
         .filter(col("row_num") <= 20)
         .select(col("term"), col("row_num").as("rank"))
       Tables.documents(s, d)
@@ -955,7 +955,7 @@ object TextOps {
         .groupBy("term").agg(count(lit(1)).as("n"))
       val tot = wc.agg(sum("n").as("t"))
       val top = Ranking.globalRowNumber(
-          wc.withColumn("neg_n", -col("n")), Seq("neg_n", "term"), 8)
+          wc.withColumn("neg_n", -col("n")), Seq("neg_n", "term"))
         .filter(col("row_num") <= 64)
         .select(col("term"), col("n"), col("row_num").as("rank"))
       val kdf = {
@@ -2311,10 +2311,9 @@ object TextOps {
     // salt alone (no RNG state, no job-order dependence). Shard = the
     // key's first hex nibble (16 shards); position = rank within the
     // shard by key. NO corpus-scale window anywhere: ranks come from
-    // Ranking.globalRowNumber (range-partition + zipWithIndex) over
-    // (shard, key), converted to per-shard positions by subtracting the
-    // 16-row broadcast shard offsets — the agg_winsorized_dist pattern,
-    // so a shard of ANY size never passes through one partition.
+    // Ranking.globalRowNumber over (shard, key), converted to per-shard
+    // positions by subtracting the 16-row broadcast shard offsets, so a
+    // shard of ANY size never passes through one partition.
     Q("txt_shuffle_shard",
       """WITH k AS (
         |  SELECT doc_id,
@@ -2339,7 +2338,7 @@ object TextOps {
           (expr("instr('0123456789abcdef', substr(key, 1, 1))") - 1)
             .cast("int"))
       val ranked = Ranking.globalRowNumber(keyed,
-        Seq("shard", "key", "doc_id"), 32)
+        Seq("shard", "key", "doc_id"))
       // shard-count-bounded (16-row) running offset — scale-safe by
       // construction, same contract as evt_cum_users' days window
       val off = keyed.groupBy("shard").agg(count(lit(1)).as("n"))
@@ -3131,9 +3130,9 @@ object TextOps {
     // log-prob). The rank is the agg_winsorized_dist discipline: ONE
     // range-partitioned global ranker over (lang, score_q, doc_id) —
     // lang partitions are corpus-scale, so no PARTITION BY lang window
-    // — with per-lang first-rank/count recovered by a broadcast
-    // 4-row offset join. Tertile edges by integer cross-multiplication
-    // (3·rank ≤ n), no percentile float anywhere.
+    // — turned into per-lang ranks by Ranking.withGroupRank. Tertile
+    // edges by integer cross-multiplication (3·rank ≤ n), no
+    // percentile float anywhere.
     Q("txt_ccnet_bucket",
       s"""WITH $lmStatsCtes,
          |sc AS (
@@ -3158,15 +3157,11 @@ object TextOps {
         .select(col("doc_id"), col("lang"),
           floor(col("sfp").cast("double") * 1000 / col("n_bigrams"))
             .cast("long").as("score_q"))
-      val ranked = graft.operators.Ranking.globalRowNumber(
-        sc, Seq("lang", "score_q", "doc_id"), 32)
-      val off = ranked.groupBy("lang")
-        .agg(min("row_num").as("first"), count(lit(1)).as("n"))
-      val rk = col("row_num") - col("first") + 1
-      ranked.join(broadcast(off), Seq("lang"))
+      Ranking.withGroupRank(
+          Ranking.globalRowNumber(sc, Seq("lang", "score_q", "doc_id")), "lang")
         .select(col("doc_id"), col("lang"), col("score_q"),
-          when(rk * 3 <= col("n"), "tail")
-            .when(rk * 3 <= col("n") * 2, "middle")
+          when(col("rk") * 3 <= col("n"), "tail")
+            .when(col("rk") * 3 <= col("n") * 2, "middle")
             .otherwise("head").as("bucket"))
         .orderBy("doc_id")
     },

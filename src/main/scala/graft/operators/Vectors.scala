@@ -1648,7 +1648,7 @@ object Vectors {
          |FROM p GROUP BY 1, 2 ORDER BY bin""".stripMargin) { (s, d) =>
       val ranked = Ranking.globalRowNumber(
         normed(s, d).withColumn("h", md5(col("vec_id").cast("string"))),
-        Seq("h", "vec_id"), 32)
+        Seq("h", "vec_id"))
       val a = ranked.select(col("row_num").as("rn"),
         col("embedding").as("ea"), col("nrm").as("na"))
       val b = ranked.select((col("row_num") - 1).as("rn"),

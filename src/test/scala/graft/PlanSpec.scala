@@ -187,6 +187,25 @@ class PlanSpec extends SparkSuite {
       .contains("BroadcastHashJoin"), "bounds table did not broadcast")
   }
 
+  test("agg_winsorized_dist: bounds and clamped sum come from one " +
+      "aggregate — at most 2 cached rank-stage scans, no Window") {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.window.WindowExec
+    def nodes(p: SparkPlan): Seq[SparkPlan] =
+      p.collectWithSubqueries { case n => n }.flatMap {
+        case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+        case n => Seq(n)
+      }
+    val all = nodes(SparkEntry.queries("agg_winsorized_dist")(spark, Sf001)
+      .queryExecution.executedPlan)
+    val scans = all.count(_.isInstanceOf[InMemoryTableScanExec])
+    // one scan for the group offsets, one for the aggregate
+    assert(scans >= 1 && scans <= 2, s"$scans InMemoryTableScan nodes")
+    assert(!all.exists(_.isInstanceOf[WindowExec]), "Window in the plan")
+  }
+
   test("dedup_incremental / evt_dau_wau: no cartesian or nested-loop joins") {
     for (q <- Seq("dedup_incremental", "evt_dau_wau")) {
       val p = plan(q)

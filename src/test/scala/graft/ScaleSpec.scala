@@ -85,6 +85,16 @@ class ScaleSpec extends SparkSuite {
     val b = SparkEntry.queries("agg_winsorized_dist")(spark, Sf001)
       .collect().map(_.toSeq).toSeq
     assert(a.nonEmpty && a == b)
+    for (parts <- Seq(1, 3, 8)) {
+      // the rank stage is memoized per input plan, not per partition
+      // count: release it so each count builds its own
+      Caches.releaseAll()
+      val got = withShufflePartitions(parts)(
+        SparkEntry.queries("agg_winsorized_dist")(spark, Sf001)
+          .collect().map(_.toSeq).toSeq)
+      assert(got == a, s"parts=$parts")
+    }
+    Caches.releaseAll()
     // the scale claim: the distributed form has NO Window node — the
     // per-group rank window (and its 3-partition skew ceiling) is gone
     val wins = SparkEntry.queries("agg_winsorized_dist")(spark, Sf001)
@@ -104,8 +114,8 @@ class ScaleSpec extends SparkSuite {
       lit("X").as("l_returnflag"),
       udf((id: Long) => v(id)).apply(col("id")).as("l_extendedprice"),
       col("id").as("l_orderkey"), lit(1).as("l_linenumber"))
-    val out = graft.operators.Analytics.winsorizedDistributed(one, 16)
-      .collect()
+    val out = withShufflePartitions(16)(
+      graft.operators.Analytics.winsorizedDistributed(one).collect())
     assert(out.length == 1 && out.head.getLong(1) == n.toLong)
 
     // local exact mirror: sort by (value, id), pick integer-rank
@@ -134,8 +144,9 @@ class ScaleSpec extends SparkSuite {
       (0 until 1000).map(i => ("C", (i % 97).toDouble, 100L + i))
     val df = rows.toDF("l_returnflag", "l_extendedprice", "l_orderkey")
       .withColumn("l_linenumber", lit(1))
-    val out = graft.operators.Analytics.winsorizedDistributed(df, 8)
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2),
+    val out = withShufflePartitions(8)(
+      graft.operators.Analytics.winsorizedDistributed(df).collect())
+      .map(r => (r.getString(0), r.getLong(1), r.getDouble(2),
         r.getDouble(3), r.getDouble(4))).toSeq
     assert(out.map(t => (t._1, t._2)) == Seq(("A", 1L), ("B", 2L), ("C", 1000L)))
     val a = out(0); val b = out(1)

@@ -34,4 +34,19 @@ object SparkSuite {
 
 abstract class SparkSuite extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSuite.spark
+
+  /** Runs `body` with `spark.sql.shuffle.partitions = parts` and AQE's
+    * partition coalescing off (so the count is what runs), restoring
+    * both settings afterwards. */
+  def withShufflePartitions[T](parts: Int)(body: => T): T = {
+    val keys = Seq("spark.sql.shuffle.partitions",
+      "spark.sql.adaptive.coalescePartitions.enabled")
+    val saved = keys.map(k => k -> spark.conf.getOption(k))
+    spark.conf.set(keys(0), parts.toLong)
+    spark.conf.set(keys(1), false)
+    try body finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
 }
