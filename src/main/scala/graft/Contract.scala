@@ -98,16 +98,15 @@ object Contract {
       }
     }
 
-  /** Read every contracted table's parquet footer schema from `dir`.
-    * An unreadable/absent file is simply omitted — [[violationsOf]] then
+  /** Every contracted table's parquet footer schema in `dir`, through
+    * [[Tables.schema]] (so later reads of the dir reuse it). An
+    * unreadable/absent file is simply omitted — [[violationsOf]] then
     * reports it as "table missing" instead of aborting the whole scan. */
-  def actualSchemas(s: SparkSession, dir: String): Map[String, StructType] = {
-    Tables.ensureNanosAsLong(s) // so an ns-vintage events file parses at all
+  def actualSchemas(s: SparkSession, dir: String): Map[String, StructType] =
     expected.keys.flatMap { t =>
-      try Some(t -> s.read.parquet(s"$dir/$t.parquet").schema)
+      try Some(t -> Tables.schema(s, dir, t))
       catch { case _: Throwable => None }
     }.toMap
-  }
 
   def violations(s: SparkSession, dir: String): Seq[String] =
     violationsOf(actualSchemas(s, dir))

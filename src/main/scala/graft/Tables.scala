@@ -34,8 +34,19 @@ object Tables {
     * (`"10528"` in /root/reference/src/queries.ts:95,107). */
   val StoreId = "42"
 
+  /** The schema of table `name` in `dir`, inferred from its parquet
+    * footer once per session and read under [[ensureNanosAsLong]], so
+    * it is the type the file actually has (an ns-vintage `events.ts`
+    * is BIGINT). `Contract.preflight` fills it for every contracted
+    * table; a dir preflight never saw infers on its first read. */
+  def schema(s: SparkSession, dir: String, name: String): StructType = {
+    ensureNanosAsLong(s)
+    Caches.memo(s, ("schema", dir, name))(
+      s.read.parquet(s"$dir/$name.parquet").schema)
+  }
+
   def read(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    spark.read.schema(schema(spark, dir, name)).parquet(s"$dir/$name.parquet")
 
   def lineitem(s: SparkSession, d: String): DataFrame = read(s, d, "lineitem")
   def orders(s: SparkSession, d: String): DataFrame   = read(s, d, "orders")
@@ -83,10 +94,8 @@ object Tables {
 
   /** events table with `ts` normalized to µs TimestampType regardless of
     * the parquet's physical timestamp encoding (see [[normalizeTs]]). */
-  def events(s: SparkSession, d: String): DataFrame = {
-    ensureNanosAsLong(s)
+  def events(s: SparkSession, d: String): DataFrame =
     normalizeTs(read(s, d, "events"))
-  }
   def documents(s: SparkSession, d: String): DataFrame  = read(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = read(s, d, "embeddings")
 

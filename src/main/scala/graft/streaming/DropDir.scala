@@ -32,16 +32,19 @@ object DropDir {
     * memory sink keeps the harness hermetic.) */
   def runAvailableNow(spark: SparkSession, srcDir: String,
       queryName: String = "dropdir_out"): DataFrame = {
-    graft.Tables.ensureNanosAsLong(spark) // process-wide by design: see its scaladoc
-    // file streams need an explicit schema: take it from a batch read
-    // (glob-filtered — the dir may hold other tables' parquet too)
     // recursiveFileLookup mirrors the reference's nested drop-dir intent
     // (getDDFiles recursion, /root/reference/src/parse.ts:44-48): files
-    // landing in subdirectories are picked up too (spec-pinned)
-    val schema = spark.read.option("pathGlobFilter", "events.parquet")
-      .option("recursiveFileLookup", "true")
-      .parquet(srcDir).schema
-    val raw = spark.readStream.schema(schema)
+    // landing in subdirectories are picked up too (spec-pinned); the
+    // stream's schema is that of the first events file found
+    val first = {
+      val w = java.nio.file.Files.walk(java.nio.file.Paths.get(srcDir))
+      try w.filter(_.getFileName.toString == "events.parquet").findFirst()
+        .orElseThrow(() => new IllegalArgumentException(
+          s"no events.parquet under drop dir $srcDir"))
+      finally w.close()
+    }
+    val raw = spark.readStream
+      .schema(graft.Tables.schema(spark, first.getParent.toString, "events"))
       .option("pathGlobFilter", "events.parquet")
       .option("recursiveFileLookup", "true")
       .parquet(srcDir)

@@ -16,6 +16,9 @@ object Sessionize {
   final case class SessionOut(user_id: Long, start_us: Long, end_us: Long,
       n: Long, total: Double)
 
+  private lazy val stateEnc = Feeds.encoder[List[Ev]]
+  private lazy val outEnc = Feeds.encoder[SessionOut]
+
   /** Pure kernel: sorted events of ONE user → closed sessions. */
   def split(events: Seq[Ev], gapMicros: Long): Seq[SessionOut] = {
     if (events.isEmpty) return Nil
@@ -68,12 +71,7 @@ object Sessionize {
     import spark.implicits._
     import org.apache.spark.sql.functions.{col, unix_micros}
     import org.apache.spark.sql.streaming.Trigger
-    graft.Tables.ensureNanosAsLong(spark)
-    val schema = spark.read.option("pathGlobFilter", "events.parquet")
-      .parquet(srcDir).schema
-    val raw = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(srcDir)
+    val raw = Feeds.source(spark, srcDir, "events")
       .transform(graft.Tables.normalizeTs)
       .select(col("user_id"), unix_micros(col("ts")).as("tsMicros"),
         col("value"))
@@ -133,6 +131,6 @@ object Sessionize {
               closed.iterator
             }
           }
-      }
+      }(stateEnc, outEnc)
   }
 }

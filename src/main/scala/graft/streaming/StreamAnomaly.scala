@@ -34,6 +34,8 @@ object StreamAnomaly {
   /** open: dayEpoch → Σ(scale-4 value); ring: last ≤7 CLOSED
     * (dayEpoch, Σscale-4) ascending by day. */
   final case class St(open: Map[Long, Long], ring: List[(Long, Long)])
+  private lazy val stateEnc = Feeds.encoder[St]
+  private lazy val outEnc = Feeds.encoder[Flag]
 
   private val DayUs = 86400000000L
 
@@ -141,7 +143,7 @@ object StreamAnomaly {
               math.max(wake, state.getCurrentWatermarkMs() + 1L))
           }
           out.iterator
-      }
+      }(stateEnc, outEnc)
   }
 
   /** Drive the flags over the events parquet in `srcDir`, AvailableNow
@@ -149,12 +151,7 @@ object StreamAnomaly {
     * watermark, which is what makes the batch-equivalence spec exact. */
   def runAvailableNow(spark: SparkSession, srcDir: String,
       queryName: String = "streamanomaly_out"): DataFrame = {
-    graft.Tables.ensureNanosAsLong(spark) // process-wide by design: see its scaladoc
-    val schema = spark.read.option("pathGlobFilter", "events.parquet")
-      .parquet(srcDir).schema
-    val raw = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(srcDir)
+    val raw = Feeds.source(spark, srcDir, "events")
       .transform(graft.Tables.normalizeTs)
       .select("event_type", "ts", "value")
     Feeds.drain(spark, flags(spark, raw, "0 seconds")

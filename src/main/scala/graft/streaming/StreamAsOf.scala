@@ -65,6 +65,8 @@ object StreamAsOf {
 
   /** (eventsBuf: (us, event_id), updatesBuf: (us, value)) */
   final case class ASt(events: List[(Long, Long)], updates: List[(Long, Double)])
+  private lazy val stateEnc = Feeds.encoder[ASt]
+  private lazy val outEnc = Feeds.encoder[AsOfOut]
 
   /** Enrich `events` (key, ts, event_id) with the latest `updates`
     * (key, ts, value) row at-or-before each event, per key.
@@ -129,7 +131,7 @@ object StreamAsOf {
               state.setTimeoutTimestamp(pending.map(_._1).min / 1000L + 1L)
           }
           out.iterator
-      }
+      }(stateEnc, outEnc)
   }
 
   /** Drive the enrichment over the events parquet in `srcDir`: clicks
@@ -141,13 +143,8 @@ object StreamAsOf {
     * the batch-equivalence spec exact. */
   def runAvailableNow(spark: SparkSession, srcDir: String,
       queryName: String = "streamasof_out"): DataFrame = {
-    graft.Tables.ensureNanosAsLong(spark) // process-wide by design: see its scaladoc
-    val schema = spark.read.option("pathGlobFilter", "events.parquet")
-      .parquet(srcDir).schema
     def side(eventType: String): DataFrame =
-      spark.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(srcDir)
+      Feeds.source(spark, srcDir, "events")
         .transform(graft.Tables.normalizeTs)
         .filter(col("event_type") === eventType)
         .select("user_id", "event_id", "ts", "value")

@@ -83,12 +83,7 @@ object StreamCdc {
     * AvailableNow into a memory sink. */
   def runAvailableNow(spark: SparkSession, srcDir: String,
       queryName: String = "streamcdc_out"): DataFrame = {
-    graft.Tables.ensureNanosAsLong(spark)
-    val schema = spark.read.option("pathGlobFilter", "events.parquet")
-      .parquet(srcDir).schema
-    val raw = graft.Tables.normalizeTs(spark.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(srcDir))
+    val raw = graft.Tables.normalizeTs(Feeds.source(spark, srcDir, "events"))
       .select("user_id", "event_id", "ts", "event_type", "value")
     Feeds.drain(spark, changes(spark, raw)
       .writeStream.format("memory").outputMode("append"), queryName,

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** Streaming ingest-time contamination gate — the streaming twin of the
   * batch `txt_contamination` scan (operators/TextOps.scala): documents
@@ -70,11 +69,7 @@ object StreamContamination {
   def runAvailableNow(spark: SparkSession, srcDir: String): DataFrame = {
     val registry = evalRegistry(spark, srcDir).persist()
     registry.count() // freeze the version before the stream starts
-    val schema = spark.read.option("pathGlobFilter", "documents.parquet")
-      .parquet(srcDir).schema
-    val stream = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "documents.parquet")
-      .parquet(srcDir)
+    val stream = Feeds.source(spark, srcDir, "documents")
     val isEval =
       substring(md5(concat(lit("eval#"), col("doc_id").cast("string"))), 1, 2)
         .lt("10")
@@ -93,11 +88,9 @@ object StreamContamination {
     // (exactly-once inside the staging dir).
     val outDir = graft.LayoutCache
       .materialize("graft_contam_scores", srcDir, "documents") { staging =>
-        // explicit per-run checkpoint + prompt housekeeping (Feeds
-        // scaladoc) — same lifecycle as the memory-sink feeds even
-        // though this one writes parquet through foreachBatch
-        val ck = Feeds.freshCheckpoint("streamcontam")
-        val q = stream.filter(!isEval).writeStream
+        // the memory-sink feeds' lifecycle (Feeds scaladoc), though
+        // this one writes parquet through foreachBatch
+        Feeds.drain(spark, stream.filter(!isEval).writeStream
           .foreachBatch { (batch: DataFrame, batchId: Long) =>
             val s = batch.sparkSession
             s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
@@ -106,11 +99,7 @@ object StreamContamination {
               .write.mode("overwrite").partitionBy("batch_id")
               .parquet(staging)
             ()
-          }
-          .option("checkpointLocation", ck.toString)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        try q.awaitTermination() finally Feeds.housekeep(spark, ck)
+          }, "streamcontam")
         // degenerate corpus (every doc in the eval split → zero
         // batches written): publish an explicitly empty-but-complete
         // layout so the marker protocol holds and readers get the

@@ -32,13 +32,8 @@ object StreamDedup {
     * kafka source + durable checkpoint; the harness stays hermetic. */
   def runAvailableNow(spark: SparkSession, srcDir: String,
       queryName: String = "streamdedup_out"): DataFrame = {
-    graft.Tables.ensureNanosAsLong(spark) // process-wide by design: see its scaladoc
-    val schema = spark.read.option("pathGlobFilter", "events.parquet")
-      .parquet(srcDir).schema
     def delivery(): DataFrame =
-      spark.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(srcDir)
+      Feeds.source(spark, srcDir, "events")
         .transform(graft.Tables.normalizeTs)
         .select("user_id", "event_id", "ts", "value", "event_type")
     // double delivery: the stream ingests the source twice, so the

@@ -35,6 +35,8 @@ object StreamDrift {
   final case class Drift(day: Long, event_type: String, n: Long,
       day_total: Long, shift_ppm: Long)
   final case class St(counts: Map[String, Long])
+  private lazy val stateEnc = Feeds.encoder[St]
+  private lazy val outEnc = Feeds.encoder[Drift]
 
   private val DayUs = 86400000000L
 
@@ -81,7 +83,7 @@ object StreamDrift {
               math.max(wake, state.getCurrentWatermarkMs() + 1L))
             Iterator.empty
           }
-      }
+      }(stateEnc, outEnc)
   }
 
   /** Drive the monitor over the events parquet in `srcDir` with the
@@ -89,18 +91,13 @@ object StreamDrift {
     * convention), AvailableNow into a memory sink. */
   def runAvailableNow(spark: SparkSession, srcDir: String,
       queryName: String = "streamdrift_out"): DataFrame = {
-    graft.Tables.ensureNanosAsLong(spark)
     val reference = graft.Tables.events(spark, srcDir)
       .select(col("event_type"),
         expr("unix_micros(ts) div 86400000000").as("day"))
       .filter(col("day") < 19738)
       .groupBy("event_type").count()
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val schema = spark.read.option("pathGlobFilter", "events.parquet")
-      .parquet(srcDir).schema
-    val raw = graft.Tables.normalizeTs(spark.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(srcDir))
+    val raw = graft.Tables.normalizeTs(Feeds.source(spark, srcDir, "events"))
       .select("event_type", "ts")
     Feeds.drain(spark, monitor(spark, raw, reference, "0 seconds")
       .writeStream.format("memory").outputMode("append"), queryName,

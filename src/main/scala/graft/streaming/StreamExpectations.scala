@@ -68,11 +68,7 @@ object StreamExpectations {
     * full matrix per trigger is free); returns the final matrix. */
   def runAvailableNow(spark: SparkSession, srcDir: String,
       queryName: String = "streamexpect_out"): DataFrame = {
-    val schema = spark.read.option("pathGlobFilter", "orders.parquet")
-      .parquet(srcDir).schema
-    val raw = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "orders.parquet")
-      .parquet(srcDir)
+    val raw = Feeds.source(spark, srcDir, "orders")
     Feeds.drain(spark, gate(raw)
       .writeStream.format("memory").outputMode("complete"), queryName,
       Feeds.sourceBytes(srcDir, "orders.parquet"))

@@ -29,6 +29,8 @@ object StreamFreq {
 
   final case class Item(key: String, item: String)
   final case class HH(key: String, item: String, est: Long, n: Long)
+  private lazy val stateEnc = Feeds.encoder[(Map[String, Long], Long)]
+  private lazy val outEnc = Feeds.encoder[HH]
 
   /** Heavy hitters over a (possibly streaming) Item set. */
   def heavyHitters(spark: SparkSession, items: Dataset[Item]): Dataset[HH] = {
@@ -44,7 +46,7 @@ object StreamFreq {
           }
           state.update((sketch, n))
           sketch.iterator.map { case (item, est) => HH(key, item, est, n) }
-      }
+      }(stateEnc, outEnc)
   }
 
   /** Drain a prepared streaming Item set AvailableNow into a memory

@@ -38,6 +38,8 @@ object StreamGrowth {
   /** open: dayEpoch → distinct users active that day; seen: users on
     * closed days; cum: |seen| maintained incrementally. */
   final case class St(open: Map[Long, Set[Long]], seen: Set[Long], cum: Long)
+  private lazy val stateEnc = Feeds.encoder[St]
+  private lazy val outEnc = Feeds.encoder[Growth]
 
   private val DayUs = 86400000000L
 
@@ -79,7 +81,7 @@ object StreamGrowth {
               math.max(wake, state.getCurrentWatermarkMs() + 1L))
           }
           out.iterator
-      }
+      }(stateEnc, outEnc)
   }
 
   /** Drive the curve over the events parquet in `srcDir`, AvailableNow
@@ -87,12 +89,7 @@ object StreamGrowth {
     * watermark (what makes the batch-equivalence spec exact). */
   def runAvailableNow(spark: SparkSession, srcDir: String,
       queryName: String = "streamgrowth_out"): DataFrame = {
-    graft.Tables.ensureNanosAsLong(spark)
-    val schema = spark.read.option("pathGlobFilter", "events.parquet")
-      .parquet(srcDir).schema
-    val raw = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(srcDir)
+    val raw = Feeds.source(spark, srcDir, "events")
       .transform(graft.Tables.normalizeTs)
       .select("user_id", "ts")
     Feeds.drain(spark, curve(spark, raw, "0 seconds")

@@ -53,13 +53,8 @@ object StreamJoin {
     * checkpoint; the harness stays hermetic. */
   def runAvailableNow(spark: SparkSession, srcDir: String,
       queryName: String = "streamjoin_out"): DataFrame = {
-    graft.Tables.ensureNanosAsLong(spark) // process-wide by design: see its scaladoc
-    val schema = spark.read.option("pathGlobFilter", "events.parquet")
-      .parquet(srcDir).schema
     def side(eventType: String): DataFrame =
-      spark.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(srcDir)
+      Feeds.source(spark, srcDir, "events")
         .transform(graft.Tables.normalizeTs)
         .filter(col("event_type") === eventType)
         .select("user_id", "event_id", "ts")

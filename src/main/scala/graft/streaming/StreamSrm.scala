@@ -28,12 +28,7 @@ object StreamSrm {
   /** Closed-day (day, n_a, n_b) arm splits over the events drop-dir. */
   def runAvailableNow(spark: SparkSession, srcDir: String,
       queryName: String = "streamsrm_out"): DataFrame = {
-    graft.Tables.ensureNanosAsLong(spark)
-    val schema = spark.read.option("pathGlobFilter", "events.parquet")
-      .parquet(srcDir).schema
-    val deduped = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(srcDir)
+    val deduped = Feeds.source(spark, srcDir, "events")
       .transform(graft.Tables.normalizeTs)
       .select(col("user_id"), col("ts"), to_date(col("ts")).as("day"))
       .withWatermark("ts", "0 seconds")

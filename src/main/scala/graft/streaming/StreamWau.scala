@@ -47,6 +47,8 @@ object StreamWau {
     * (dayEpoch, sketch) ascending; minDay: earliest day ever seen. */
   final case class St(open: Map[Long, List[String]],
       ring: List[(Long, List[String])], minDay: Long)
+  private lazy val stateEnc = Feeds.encoder[St]
+  private lazy val outEnc = Feeds.encoder[Wau]
 
   private val DayUs = 86400000000L
   private val K = graft.functions.KmvSketch.K
@@ -103,7 +105,7 @@ object StreamWau {
               math.max(wake, state.getCurrentWatermarkMs() + 1L))
           }
           out.iterator
-      }
+      }(stateEnc, outEnc)
   }
 
   /** Drive the estimates over the events parquet in `srcDir`,
@@ -112,12 +114,7 @@ object StreamWau {
     * exact). */
   def runAvailableNow(spark: SparkSession, srcDir: String,
       queryName: String = "streamwau_out"): DataFrame = {
-    graft.Tables.ensureNanosAsLong(spark)
-    val schema = spark.read.option("pathGlobFilter", "events.parquet")
-      .parquet(srcDir).schema
-    val raw = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(srcDir)
+    val raw = Feeds.source(spark, srcDir, "events")
       .transform(graft.Tables.normalizeTs)
       .select("user_id", "ts")
     Feeds.drain(spark, estimates(spark, raw, "0 seconds")

@@ -107,4 +107,48 @@ class ContractSpec extends SparkSuite {
     val bad = Seq("plain ascii", "café au lait").toDF("text")
     assert(multiByte(bad).count() == 1)
   }
+
+  /** Jobs started while `body` runs (after the listener bus drains). */
+  private def jobsDuring(body: => Unit): Int = {
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        n.incrementAndGet(): Unit
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(l)
+    try {
+      org.apache.spark.GraftTestBus.drain(sc)
+      n.set(0)
+      body
+      org.apache.spark.GraftTestBus.drain(sc)
+      n.get
+    } finally sc.removeSparkListener(l)
+  }
+
+  test("after preflight, building readers runs no schema-inference job") {
+    Contract.preflight(spark, SparkSuite.Sf0001)
+    val d = SparkSuite.Sf0001
+    val jobs = jobsDuring {
+      Contract.expected.keys.foreach(t => Tables.read(spark, d, t))
+      Tables.events(spark, d)
+      Tables.charge(spark, d)
+      graft.streaming.Feeds.source(spark, d, "events")
+      graft.streaming.Feeds.source(spark, d, "documents")
+    }
+    assert(jobs == 0)
+  }
+
+  test("a dir preflight never saw infers its schema on the first read only") {
+    val tmp = java.nio.file.Files.createTempDirectory("unseen").toString
+    spark.range(3).selectExpr("cast(id as int) as r_regionkey",
+        "cast(id as string) as r_name")
+      .write.parquet(s"$tmp/region.parquet")
+    assert(jobsDuring(Tables.region(spark, tmp)) >= 1)
+    assert(jobsDuring(Tables.region(spark, tmp)) == 0)
+    assert(Tables.region(spark, tmp).count() == 3)
+    assert(Tables.schema(spark, tmp, "region").fieldNames.toSeq ==
+      Seq("r_regionkey", "r_name"))
+  }
 }
