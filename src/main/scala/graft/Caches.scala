@@ -4,6 +4,7 @@ import scala.collection.mutable
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.storage.StorageLevel
 
 /** The one owner of every materialised stage in `graft.operators`.
@@ -21,6 +22,13 @@ import org.apache.spark.storage.StorageLevel
   * when the batch is done. Serialized blocks are 3-5× smaller than the
   * DataFrame default, which under a constrained driver evicted and
   * recomputed the hot charge/shingle views (VERDICT r6).
+  *
+  * Membership is decided where a stage is defined: a stage with two or
+  * more consumers wraps its own body in [[shared]] (the MinHash and
+  * text-statistics stages in `TextOps`), and a stage some consumer
+  * needs a filter pushed through stays unshared, because a cached stage
+  * stops pushdown at its boundary (`Tables.charge`, `Tables.deptSales`,
+  * `Rollup.frame`). The mains (Bench, Verify, Explain) cache nothing.
   *
   * [[memo]] keeps what plan substitution cannot share: a frame holding
   * a fresh RDD per build (a `zipWithIndex` rank, an iterative loop's
@@ -44,19 +52,28 @@ import org.apache.spark.storage.StorageLevel
 object Caches {
   private val Ser = StorageLevel.MEMORY_AND_DISK_SER
 
-  /** Canonical plan → the first frame registered for it, in
-    * registration order (the FIFO [[enforceBudget]] evicts in). */
-  private val reg = mutable.LinkedHashMap.empty[LogicalPlan, DataFrame]
+  /** (session, canonical plan, schema) → the first frame registered for
+    * it, in registration order (the FIFO [[enforceBudget]] evicts in).
+    * The schema is part of the key because canonicalization drops
+    * output names: `(doc_id, sx)` and `(doc_id, s)` over one plan are
+    * one cached stage but two frames. */
+  private val reg = mutable.LinkedHashMap
+    .empty[(SparkSession, LogicalPlan, StructType), DataFrame]
 
   private final class Slot { var value: Option[Any] = None }
   private val memos = mutable.HashMap.empty[(SparkSession, Any), Slot]
 
-  /** Persist `df` for the session and register its plan once. */
+  /** The session's persisted frame for `df`'s canonical plan: the one
+    * registered first, or `df`, persisted and registered now. A stage
+    * that wraps its own body in `shared` is built by whichever consumer
+    * asks first and only read by the rest. */
   def shared(df: DataFrame): DataFrame = {
-    val p = df.persist(Ser)
-    val key = p.queryExecution.analyzed.canonicalized
-    synchronized { purgeStopped(); reg.getOrElseUpdate(key, p) }
-    p
+    val key = (df.sparkSession, df.queryExecution.analyzed.canonicalized,
+      df.schema)
+    synchronized {
+      purgeStopped()
+      reg.getOrElseUpdate(key, df.persist(Ser))
+    }
   }
 
   /** The value of `build` for (`s`, `key`), built once per session. */
@@ -99,12 +116,11 @@ object Caches {
     * footprint bounded and makes the trade VISIBLE instead of relying
     * on silent eviction). Enforcement is FIFO over the registration
     * order: the oldest shared stage is the one whose consumers have
-    * most likely all run (Bench materializes ingest-shaped stages
-    * up front, queries consume them roughly in registration order).
-    * An eviction also drops the memo values. Call at
-    * natural sync points (after the warm-up materialization, after a
-    * pre-pass); a budget of Long.MaxValue (no env var) is a no-op.
-    * Returns the number of stages evicted. */
+    * most likely all run (a stage registers when its first consumer is
+    * built, so a sweep meets its stages roughly in registration order).
+    * An eviction also drops the memo values. Call at natural sync
+    * points (after a pre-pass); a budget of Long.MaxValue (no env var)
+    * is a no-op. Returns the number of stages evicted. */
   def enforceBudget(spark: SparkSession,
       budget: Long = sys.env.get("SPARK_GRAFT_CACHE_BUDGET_MB")
         .map(_.toLong * 1024L * 1024L).getOrElse(Long.MaxValue)): Int =
@@ -124,7 +140,7 @@ object Caches {
     * that recycles sessions (per-suite test sessions, notebook
     * drivers) would otherwise keep every dead session reachable. */
   private def purgeStopped(): Unit = {
-    reg.filterInPlace((_, df) => !df.sparkSession.sparkContext.isStopped)
+    reg.filterInPlace { case ((s, _, _), _) => !s.sparkContext.isStopped }
     memos.filterInPlace { case ((s, _), _) => !s.sparkContext.isStopped }
   }
 }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-quality audit: print `explain("formatted")` for the named
   * queries (or all). Usage: runMain graft.Explain <sfDir> [name…]
   */
@@ -10,15 +8,8 @@ object Explain {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val names = if (args.length > 1) args.drop(1).toSeq
     else SparkEntry.queries.keys.toSeq.sorted
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = SparkEntry.session()
     spark.sparkContext.setLogLevel("ERROR")
-    graft.plans.Functions.registerAll(spark)
     names.foreach { n =>
       println(s"\n===== $n =====")
       try SparkEntry.queries(n)(spark, sfDir).explain("formatted")

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Empirical naive-vs-skew-safe comparison (VERDICT r11 #4): times each
@@ -46,16 +46,9 @@ object SkewProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0)
       else sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/repo/testdata_skew")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // the salted-join scenario: a dimension too big to broadcast
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = SparkEntry.cpus
+    // the salted-join scenario: a dimension too big to broadcast
+    val spark = SparkEntry.session("spark.sql.autoBroadcastJoinThreshold" -> "-1")
 
     val li = Tables.lineitem(spark, sfDir)
       .select("l_orderkey", "l_partkey", "l_quantity")

@@ -35,4 +35,24 @@ object SparkEntry {
     * (driver records a weaker rows-only check). */
   def oracleSql: Map[String, String] =
     all.flatMap(q => q.oracle.map(sql => q.name -> sql)).toMap
+
+  /** `SPARK_GRAFT_CPUS` (default 4): the mains' local threads and batch
+    * shuffle partitions. */
+  def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+
+  /** The session every main runs on: `local[cpus]`, `cpus` shuffle
+    * partitions, UTC, no UI, WARN logging and graft's functions
+    * registered, plus the main's own `conf`. */
+  def session(conf: (String, String)*): SparkSession = {
+    val b = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+    conf.foreach { case (k, v) => b.config(k, v) }
+    val spark = b.getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    graft.plans.Functions.registerAll(spark)
+    spark
+  }
 }

@@ -109,7 +109,9 @@ object Tables {
 
   /** `charge` table analog (FIXTURES.md §A1; schema source:
     * /root/reference/src/queries.ts:12-35,93-121). One row per lineitem,
-    * enriched with its order's customer. */
+    * enriched with its order's customer. Not shared ([[graft.Caches]]):
+    * consumers filter through it to the scans (flt_conj_eq3), and
+    * dd_rollup embeds it. */
   def charge(s: SparkSession, d: String): DataFrame =
     chargeFrom(lineitem(s, d), orders(s, d))
 
@@ -159,7 +161,9 @@ object Tables {
   /** `combinedImportedTillTotal` analog (FIXTURES.md §A3; reference
     * /root/reference/src/queries.ts:57-74): one row per order-date with
     * payment-method component sums (priority buckets play the payment
-    * methods). Aggregate-before-join: partial aggregation is map-side. */
+    * methods). Aggregate-before-join: partial aggregation is map-side.
+    * Not shared ([[graft.Caches]]): consumers' date filters push through
+    * the aggregate to the orders scan, and dd_rollup embeds it. */
   def tillTotals(s: SparkSession, d: String): DataFrame = {
     val o = orders(s, d)
     def bucket(p: String) =
@@ -201,7 +205,9 @@ object Tables {
 
   /** `departmentSales` analog (FIXTURES.md §A4; reference
     * /root/reference/src/queries.ts:76-81): daily per-brand sales.
-    * part is a genuine dimension ⇒ broadcast. */
+    * part is a genuine dimension ⇒ broadcast. Not shared
+    * ([[graft.Caches]]): dd_rollup's 9-brand filter must reach the part
+    * scan through it. */
   def deptSales(s: SparkSession, d: String): DataFrame = {
     val l = lineitem(s, d)
     val p = part(s, d).select(col("p_partkey"), col("p_brand").as("deptCode"))

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -14,18 +13,7 @@ object Verify {
     val unknown = only.diff(SparkEntry.queries.keySet)
     require(unknown.isEmpty,
       s"unknown query name(s): ${unknown.mkString(", ")}")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    // SPARK_GRAFT_STATE_STORE=rocksdb → RocksDB streaming state
-    graft.streaming.Feeds.stateStoreProvider.foreach(p =>
-      builder.config("spark.sql.streaming.stateStore.providerClass", p))
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.plans.Functions.registerAll(spark)
+    val spark = SparkEntry.session()
     // schema tripwire (VERDICT r6 #2): drift = one labeled failure here,
     // not N opaque per-query analysis errors below
     Contract.preflight(spark, sfDir)

@@ -22,6 +22,8 @@ object Rollup {
 
   /** One row per date: till totals ⋈ dept pivot ⋈ store-expense agg ⋈
     * customer-charge agg ⋈ other-payment agg, plus all derived scalars.
+    * Not shared ([[graft.Caches]]): a cached frame would replace the
+    * part scan that dd_rollup's 9-brand filter must reach (PlanSpec).
     */
   def frame(s: SparkSession, d: String): DataFrame = {
     val c = Tables.charge(s, d)

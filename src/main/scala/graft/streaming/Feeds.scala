@@ -94,23 +94,6 @@ object Feeds {
       .option("pathGlobFilter", s"$table.parquet")
       .parquet(srcDir)
 
-  /** Opt-in state-store provider override (VERDICT r13 #3), resolved
-    * from `SPARK_GRAFT_STATE_STORE` at session build time:
-    * `rocksdb` → Spark's bundled RocksDB provider (state lives
-    * off-heap in a native LSM under the checkpoint dir — the
-    * production answer both to `stream_dedup_feed`'s >8 g ON-HEAP
-    * state at sf10 and to `HDFSBackedStateStoreProvider`'s
-    * per-partition version-map fixed cost that scales with
-    * shuffle.partitions); unset/anything else → Spark's default
-    * (HDFSBacked). A session CONFIG, not a per-feed option, because
-    * Spark resolves the provider class once per streaming query from
-    * the session conf. */
-  def stateStoreProvider: Option[String] =
-    sys.env.get("SPARK_GRAFT_STATE_STORE").collect {
-      case "rocksdb" =>
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-    }
-
   /** Scale-adaptive stateful-shuffle sizing (r14, guide §2.2/§2.5):
     * a streaming query's state-store count equals its shuffle partition
     * count, and every `HDFSBackedStateStoreProvider` partition pays a
@@ -128,14 +111,14 @@ object Feeds {
     *   partitions = clamp(max(ceil(srcBytes / targetBytes),
     *                          min(cores, srcBytes / minBytes)), 1, cap)
     *
-    * `targetBytes` defaults to 8 MB of source parquet per partition —
+    * `targetBytes` is 8 MB of source parquet per partition —
     * calibrated to the measured local fixed cost (~40 ms/partition/
     * micro-batch across the feeds' 1-4 stores; a partition must carry
     * at least a few MB of rows for compute to dominate that). A
-    * production deployment raises `SPARK_GRAFT_STREAM_PART_BYTES` to
-    * land per-partition STATE in the 100-500 MB band the state-store
-    * providers are designed around (and the cap with it); the local
-    * defaults keep the ramp visible at bench scale: sf0.01 → 1,
+    * production deployment would raise it to land per-partition STATE
+    * in the 100-500 MB band the state-store providers are designed
+    * around (and the cap with it); these constants keep the ramp
+    * visible at bench scale: sf0.01 → 1,
     * sf0.1 → 4 (the parallelism floor — see the r15 note in the body),
     * sf1/sf10 → the floor caps at `cores` and the linear term takes
     * over above it. Results are partition-count-independent (every
@@ -143,10 +126,8 @@ object Feeds {
     * oracle-green at 1, 4 and 32 partitions), so this changes cost,
     * never output. */
   def statefulShufflePartitions(srcBytes: Long, cores: Int = 1): Int = {
-    val target = sys.env.get("SPARK_GRAFT_STREAM_PART_BYTES")
-      .map(_.toLong).filter(_ > 0).getOrElse(8L << 20)
-    val cap = sys.env.get("SPARK_GRAFT_STREAM_MAX_PARTS")
-      .map(_.toInt).filter(_ > 0).getOrElse(1 << 15)
+    val target = 8L << 20
+    val cap = 1 << 15
     // Parallelism floor (r15): the r14 formula collapsed every sf0.1
     // feed to ONE partition, and the full-sweep A/B showed that to be
     // the round's global regression — the 13 feeds went 25.4 → 36.6 s
@@ -159,8 +140,7 @@ object Feeds {
     // while each partition still carries ≥ `minBytes` of source — a
     // data-bounded floor, with cores only as the availability cap; at
     // scale the 8 MB linear term dominates and the floor is inactive.
-    val minBytes = sys.env.get("SPARK_GRAFT_STREAM_MIN_PART_BYTES")
-      .map(_.toLong).filter(_ > 0).getOrElse(512L << 10)
+    val minBytes = 512L << 10
     val c0 = math.max(1, cores)
     val floorP = math.min(c0.toLong,
       if (srcBytes > 0) srcBytes / minBytes else 0L).toInt

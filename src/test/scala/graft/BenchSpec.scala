@@ -1,0 +1,20 @@
+package graft
+
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Bench reads its per-query seconds back from two writers: Python's
+  * `json.dump` (tools/record_baseline.py, `"queries": {`) and Bench's
+  * own compact line (`"queries":{`). */
+class BenchSpec extends AnyFunSuite {
+
+  test("queriesMap reads both artifact spacings") {
+    val spaced = """{"metric": "total", "cpus": "4", "queries": """ +
+      """{"agg_hhi": 0.46, "fn_gst": -1.5e-1}, "rows_out": {"agg_hhi": 7}}"""
+    val compact = """{"metric":"total","cpus":"4","queries":""" +
+      """{"agg_hhi":0.46,"fn_gst":-1.5e-1},"rows_out":{"agg_hhi":7}}"""
+    val want = Map("agg_hhi" -> 0.46, "fn_gst" -> -0.15)
+    assert(Bench.queriesMap(spaced) == want)
+    assert(Bench.queriesMap(compact) == want)
+    assert(Bench.queriesMap("""{"metric":"total"}""").isEmpty)
+  }
+}

@@ -110,6 +110,17 @@ class CachesSpec extends SparkSuite {
     Caches.releaseAll()
   }
 
+  test("shared keeps each caller's column names over one cached plan") {
+    // canonicalization drops output names, so both frames read one
+    // cached stage; each caller must still get its own columns back
+    Caches.releaseAll()
+    def mk(name: String) = Tables.events(spark, SparkSuite.Sf0001)
+      .select(col("event_id").as(name)).distinct()
+    assert(Caches.shared(mk("a")).columns.toSeq == Seq("a"))
+    assert(Caches.shared(mk("b")).columns.toSeq == Seq("b"))
+    Caches.releaseAll()
+  }
+
   test("a memo build may call memo again") {
     val outer = Caches.memo(spark, "caches-spec-outer") {
       Caches.memo(spark, "caches-spec-inner")(1) + 1
@@ -119,20 +130,54 @@ class CachesSpec extends SparkSuite {
     assert(Caches.memo(spark, "caches-spec-outer")(99) == 2)
   }
 
+  /** Lines of `files` containing any of `patterns`, as `file:line: text`. */
+  private def offenders(files: Seq[java.io.File],
+      patterns: Seq[String]): Seq[String] = for {
+    f <- files
+    (line, i) <- java.nio.file.Files.readAllLines(f.toPath)
+      .toArray(Array.empty[String]).toSeq.zipWithIndex
+    if patterns.exists(line.contains)
+  } yield s"${f.getName}:${i + 1}: ${line.trim}"
+
   test("operators and streaming materialize only through Caches") {
     val dirs = Seq("src/main/scala/graft/operators",
       "src/main/scala/graft/streaming").map(new java.io.File(_))
     dirs.foreach(d => assert(d.isDirectory, s"missing source dir $d"))
-    val offenders = for {
-      dir <- dirs
-      f <- dir.listFiles().toSeq.filter(_.getName.endsWith(".scala"))
-      (line, i) <- java.nio.file.Files.readAllLines(f.toPath)
-        .toArray(Array.empty[String]).toSeq.zipWithIndex
-      if line.contains("localCheckpoint(") ||
-        line.contains("ConcurrentHashMap")
-    } yield s"${f.getName}:${i + 1}: ${line.trim}"
-    assert(offenders.isEmpty,
+    val found = offenders(
+      dirs.flatMap(_.listFiles().toSeq.filter(_.getName.endsWith(".scala"))),
+      Seq("localCheckpoint(", "ConcurrentHashMap"))
+    assert(found.isEmpty,
       "materialize through graft.Caches (shared / memo / cut):\n" +
-        offenders.mkString("\n"))
+        found.mkString("\n"))
+  }
+
+  test("the mains cache nothing: sharing is decided where a stage is " +
+      "defined") {
+    val mains = Seq("Bench", "Verify", "Explain")
+      .map(m => new java.io.File(s"src/main/scala/graft/$m.scala"))
+    mains.foreach(f => assert(f.isFile, s"missing source file $f"))
+    val found = offenders(mains, Seq("Caches.shared(", ".persist(", ".cache()"))
+    assert(found.isEmpty,
+      "share a stage in its definition (Caches.shared), not in a main:\n" +
+        found.mkString("\n"))
+  }
+
+  test("a stage shared in its definition is one frame per session, " +
+      "persisted once") {
+    Caches.releaseAll()
+    val stages = Seq[(org.apache.spark.sql.SparkSession, String) =>
+        org.apache.spark.sql.DataFrame](
+      operators.TextOps.nearCloneShingles, operators.TextOps.minhashSig,
+      operators.TextOps.minhashCandidates, operators.TextOps.lmSuffStats,
+      operators.TextOps.distinctBigramShingles)
+    for (stage <- stages) {
+      val first = stage(spark, SparkSuite.Sf0001)
+      val before = Caches.registered
+      val again = stage(spark, SparkSuite.Sf0001)
+      assert(again eq first, "a second build returned another frame")
+      assert(Caches.registered == before, "a second build registered again")
+      assert(cached(first))
+    }
+    Caches.releaseAll()
   }
 }

@@ -732,12 +732,14 @@ class PlanSpec extends SparkSuite {
 
   test("shared ingest stages stay cache-substitutable: every consumer " +
       "embeds the stage's exact canonical subplan") {
-    // Bench persists these stages once per session and Spark's
-    // CacheManager substitutes them into any query whose ANALYZED plan
-    // contains a sameResult subtree (substitution runs before the
-    // optimizer). A drive-by edit to one consumer (an extra column, a
-    // reordered filter) silently forks the plan and the sharing stops —
-    // this pins the canonical identity for the stages added in r10.
+    // These stages share themselves where they are defined
+    // (Caches.shared), and Spark's CacheManager substitutes them into any
+    // query whose ANALYZED plan contains a sameResult subtree
+    // (substitution runs before the optimizer). A drive-by edit to one
+    // consumer (an extra column, a reordered filter) silently forks the
+    // plan and the sharing stops — this pins it with no persist of its
+    // own: every consumer starts from an empty registry, and building it
+    // is what shares the stage.
     // txt_ccnet_bucket also consumes lmSuffStats but routes it through
     // Ranking.globalRowNumber's RDD boundary (createDataFrame over
     // zipWithIndex) — the substitution fires when the upstream RDD
@@ -745,27 +747,15 @@ class PlanSpec extends SparkSuite {
     // final plan string cannot show an InMemoryTableScan past the
     // ExistingRDD scan, so it can't be pinned here.
     val cases = Seq(
-      graft.operators.TextOps.distinctBigramShingles(spark, Sf001)
-        -> Seq("txt_df_spectrum", "txt_contamination", "txt_rouge2"),
-      graft.operators.TextOps.lmSuffStats(spark, Sf001)
-        -> Seq("txt_lm_score"))
-    for ((stageDf, consumers) <- cases) {
-      // functional check, not plan-identity: persist the stage, then
-      // every consumer's EXECUTED plan must read it from the cache
-      // (plan-subtree sameResult is too strict — the analyzer's
-      // relation dedup re-ids one branch when documents appears both
-      // inside the stage and as a join side, yet substitution still
-      // fires on the canonicalized match)
-      stageDf.persist()
-      try {
-        for (q <- consumers) {
-          val exec = SparkEntry.queries(q)(spark, Sf001)
-            .queryExecution.executedPlan.toString
-          assert(exec.contains("InMemoryTableScan"),
-            s"$q no longer reads the shared stage from cache — " +
-              "session-level cache substitution is lost")
-        }
-      } finally { stageDf.unpersist(); () }
+      Seq("txt_df_spectrum", "txt_contamination", "txt_rouge2"),
+      Seq("txt_lm_score"))
+    for (consumers <- cases; q <- consumers) {
+      Caches.releaseAll()
+      val exec = SparkEntry.queries(q)(spark, Sf001)
+        .queryExecution.executedPlan.toString
+      assert(exec.contains("InMemoryTableScan"),
+        s"$q no longer reads the shared stage from cache — " +
+          "session-level cache substitution is lost")
     }
   }
 
