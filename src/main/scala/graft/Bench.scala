@@ -161,12 +161,11 @@ object Bench {
     // the shared stages the pre-pass built, under the configured
     // storage ceiling (SPARK_GRAFT_CACHE_BUDGET_MB, VERDICT r10 #6 and
     // r12 #4: the sf10 leg held 8.75 GB of them); no-op without the env
-    // var, and recorded in the artifact with the stages it evicted
+    // var. Caches also enforces it as each stage registers, and an
+    // evicted stage stays evicted for the batch.
     val cacheBudgetMb: Long =
       sys.env.get("SPARK_GRAFT_CACHE_BUDGET_MB").map(_.toLong).getOrElse(-1L)
-    val cacheEvicted = Caches.enforceBudget(spark)
-    if (cacheEvicted > 0) System.err.println(
-      s"[bench] cache budget evicted $cacheEvicted shared stage(s)")
+    Caches.enforceBudget(spark)
     // one timed query execution: (seconds [negative = time-to-failure],
     // rows, errMsg)
     def timedPass(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
@@ -282,6 +281,9 @@ object Bench {
     // point only formats the already-collected results. The batch-end
     // storage footprint is measured FIRST — releasing would zero it.
     val storageMem = spark.sparkContext.getRDDStorageInfo.map(_.memSize).sum
+    val cacheEvicted = Caches.evictions
+    if (cacheEvicted > 0) System.err.println(
+      s"[bench] cache budget evicted $cacheEvicted shared stage(s)")
     if (flagged.nonEmpty && adjudicate) {
       Caches.releaseAll()
       try spark.catalog.clearCache() catch { case _: Throwable => () }
@@ -332,8 +334,8 @@ object Bench {
     val protocol =
       if (repeat == 1) s"$warmth-single-pass"
       else s"$warmth-median-of-$repeat"
-    // storageMem (the batch-end shared-cache footprint) was captured
-    // above, before the pre-fork release
+    // storageMem (the batch-end shared-cache footprint) and
+    // cacheEvicted were captured above, before the pre-fork release
     // execution environment (VERDICT r13 #1): cpus/shuffle partitions/
     // master are the axis that manufactured five rounds of streaming
     // false-flags (baseline @4 cpus vs sweeps @32) — every artifact

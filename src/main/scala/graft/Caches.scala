@@ -11,7 +11,7 @@ import org.apache.spark.storage.StorageLevel
   *
   * | entry point      | lifetime                              | storage level                   | released by |
   * |------------------|---------------------------------------|---------------------------------|-------------|
-  * | [[shared]]`(df)` | session; one entry per canonical plan | `MEMORY_AND_DISK_SER` cache     | [[releaseAll]]; [[enforceBudget]], oldest first |
+  * | [[shared]]`(df)` | session; one entry per canonical plan | `MEMORY_AND_DISK_SER` cache     | [[releaseAll]]; [[enforceBudget]], oldest first, for the rest of the batch |
   * | [[memo]]`(s, k)` | session; one value per (session, key) | whatever `build` makes          | dropped whenever a [[shared]] stage is released; purged with its session |
   * | [[cut]]`(df)`    | the query holding the frame           | lazy local checkpoint, `MEMORY_AND_DISK_SER` | no one: blocks live with the SparkContext |
   *
@@ -24,11 +24,13 @@ import org.apache.spark.storage.StorageLevel
   * recomputed the hot charge/shingle views (VERDICT r6).
   *
   * Membership is decided where a stage is defined: a stage with two or
-  * more consumers wraps its own body in [[shared]] (the MinHash and
-  * text-statistics stages in `TextOps`), and a stage some consumer
-  * needs a filter pushed through stays unshared, because a cached stage
-  * stops pushdown at its boundary (`Tables.charge`, `Tables.deptSales`,
-  * `Rollup.frame`). The mains (Bench, Verify, Explain) cache nothing.
+  * more consumers wraps its own body in [[shared]] (the `Tables` views,
+  * `Rollup.frame`, the MinHash and text-statistics stages in `TextOps`).
+  * A cached stage stops pushdown at its boundary, and the CacheManager
+  * substitutes it into every plan that embeds it, so a consumer that
+  * needs a filter at the scan reads an unshared variant whose plan
+  * differs (`Tables.chargeSub`, `Tables.pivotDeptSales`). The mains
+  * (Bench, Verify, Explain) cache nothing.
   *
   * [[memo]] keeps what plan substitution cannot share: a frame holding
   * a fresh RDD per build (a `zipWithIndex` rank, an iterative loop's
@@ -60,19 +62,32 @@ object Caches {
   private val reg = mutable.LinkedHashMap
     .empty[(SparkSession, LogicalPlan, StructType), DataFrame]
 
+  /** Keys [[enforceBudget]] evicted since the last [[releaseAll]]: a
+    * later [[shared]] call for one returns its frame unpersisted, so an
+    * eviction sticks instead of the next consumer persisting it again. */
+  private val evicted = mutable.HashSet
+    .empty[(SparkSession, LogicalPlan, StructType)]
+
   private final class Slot { var value: Option[Any] = None }
   private val memos = mutable.HashMap.empty[(SparkSession, Any), Slot]
 
   /** The session's persisted frame for `df`'s canonical plan: the one
-    * registered first, or `df`, persisted and registered now. A stage
-    * that wraps its own body in `shared` is built by whichever consumer
-    * asks first and only read by the rest. */
+    * registered first, or `df`, persisted and registered now (after
+    * [[enforceBudget]] makes room), or `df` unpersisted if the budget
+    * evicted the plan. A stage that wraps its own body in `shared` is
+    * built by whichever consumer asks first and only read by the rest. */
   def shared(df: DataFrame): DataFrame = {
     val key = (df.sparkSession, df.queryExecution.analyzed.canonicalized,
       df.schema)
     synchronized {
       purgeStopped()
-      reg.getOrElseUpdate(key, df.persist(Ser))
+      if (evicted(key)) df
+      else reg.getOrElse(key, {
+        enforceBudget(df.sparkSession)
+        val p = df.persist(Ser)
+        reg(key) = p
+        p
+      })
     }
   }
 
@@ -91,16 +106,20 @@ object Caches {
   /** Query-local lineage cut: a lazy serialized local checkpoint. */
   def cut(df: DataFrame): DataFrame = df.localCheckpoint(eager = false, Ser)
 
-  /** Unpersist every registered stage (async) and clear the registry
-    * and the memo values. Call at batch end — between Bench repeats
-    * would defeat the steady-state sharing. */
+  /** Unpersist every registered stage (async) and clear the registry,
+    * the evictions and the memo values. Call at batch end — between
+    * Bench repeats would defeat the steady-state sharing. */
   def releaseAll(): Unit = synchronized {
     reg.valuesIterator.foreach(_.unpersist(blocking = false))
     reg.clear()
+    evicted.clear()
     memos.clear()
   }
 
   private[graft] def registered: Int = synchronized(reg.size)
+
+  /** Stages [[enforceBudget]] evicted since the last [[releaseAll]]. */
+  private[graft] def evictions: Int = synchronized(evicted.size)
 
   /** Total bytes the session's cached RDD blocks hold in memory right
     * now — the number the registry's budget is enforced against. */
@@ -118,22 +137,28 @@ object Caches {
     * order: the oldest shared stage is the one whose consumers have
     * most likely all run (a stage registers when its first consumer is
     * built, so a sweep meets its stages roughly in registration order).
-    * An eviction also drops the memo values. Call at natural sync
-    * points (after a pre-pass); a budget of Long.MaxValue (no env var)
-    * is a no-op. Returns the number of stages evicted. */
+    * An evicted stage stays evicted until [[releaseAll]]: its later
+    * consumers recompute it. An eviction also drops the memo values.
+    * [[shared]] calls this before each registration; call it at sync
+    * points too (after a pre-pass), since a stage's storage appears
+    * when a consumer runs, not when it registers. A budget of
+    * Long.MaxValue (no env var) is a no-op. Returns the number of
+    * stages evicted. */
   def enforceBudget(spark: SparkSession,
       budget: Long = sys.env.get("SPARK_GRAFT_CACHE_BUDGET_MB")
         .map(_.toLong * 1024L * 1024L).getOrElse(Long.MaxValue)): Int =
     synchronized {
-      var evicted = 0
-      while (reg.nonEmpty && storageBytes(spark) > budget) {
+      var n = 0
+      while (budget < Long.MaxValue && reg.nonEmpty &&
+          storageBytes(spark) > budget) {
         val (key, oldest) = reg.head
         reg.remove(key)
+        evicted += key
         oldest.unpersist(blocking = true) // blocking: re-read must see it gone
-        evicted += 1
+        n += 1
       }
-      if (evicted > 0) memos.clear()
-      evicted
+      if (n > 0) memos.clear()
+      n
     }
 
   /** Forget the stages and memo values of stopped sessions — a JVM
@@ -141,6 +166,7 @@ object Caches {
     * drivers) would otherwise keep every dead session reachable. */
   private def purgeStopped(): Unit = {
     reg.filterInPlace { case ((s, _, _), _) => !s.sparkContext.isStopped }
+    evicted.filterInPlace { case (s, _, _) => !s.sparkContext.isStopped }
     memos.filterInPlace { case ((s, _), _) => !s.sparkContext.isStopped }
   }
 }

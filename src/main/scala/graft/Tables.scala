@@ -109,11 +109,11 @@ object Tables {
 
   /** `charge` table analog (FIXTURES.md §A1; schema source:
     * /root/reference/src/queries.ts:12-35,93-121). One row per lineitem,
-    * enriched with its order's customer. Not shared ([[graft.Caches]]):
-    * consumers filter through it to the scans (flt_conj_eq3), and
-    * dd_rollup embeds it. */
+    * enriched with its order's customer. Shared ([[Caches.shared]]):
+    * some 29 queries read it, and no plan guard needs a filter pushed
+    * through it (chargeSub is the unshared, scan-bounded form). */
   def charge(s: SparkSession, d: String): DataFrame =
-    chargeFrom(lineitem(s, d), orders(s, d))
+    Caches.shared(chargeFrom(lineitem(s, d), orders(s, d)))
 
   /** `charge` restricted to `l_orderkey < maxOrder` — exactly
     * `charge.filter(id < maxOrder*100)` (linenumber < 100), but the
@@ -162,14 +162,14 @@ object Tables {
     * /root/reference/src/queries.ts:57-74): one row per order-date with
     * payment-method component sums (priority buckets play the payment
     * methods). Aggregate-before-join: partial aggregation is map-side.
-    * Not shared ([[graft.Caches]]): consumers' date filters push through
-    * the aggregate to the orders scan, and dd_rollup embeds it. */
+    * Shared ([[Caches.shared]]): some 16 queries read it, and no plan
+    * guard needs a filter pushed through it. */
   def tillTotals(s: SparkSession, d: String): DataFrame = {
     val o = orders(s, d)
     def bucket(p: String) =
       sum(when(col("o_orderpriority") === p, col("o_totalprice").cast(M))
         .otherwise(lit(0).cast(M)))
-    o.groupBy(to_date(col("o_orderdate")).as("date"))
+    Caches.shared(o.groupBy(to_date(col("o_orderdate")).as("date"))
       .agg(
         countDistinct(col("o_custkey")).as("customerCount"),
         sum(col("o_totalprice").cast(M)).as("totalSales"),
@@ -188,7 +188,7 @@ object Tables {
         // deterministic small rounding analog (reference totalRounding)
         ((countDistinct(col("o_custkey")) % 5) * lit(0.01).cast(DecimalType(3, 2))
           - lit(0.02).cast(DecimalType(3, 2))).as("totalRounding")
-      )
+      ))
   }
 
   /** `department` dimension analog (FIXTURES.md §A4; reference
@@ -205,12 +205,22 @@ object Tables {
 
   /** `departmentSales` analog (FIXTURES.md §A4; reference
     * /root/reference/src/queries.ts:76-81): daily per-brand sales.
-    * part is a genuine dimension ⇒ broadcast. Not shared
-    * ([[graft.Caches]]): dd_rollup's 9-brand filter must reach the part
-    * scan through it. */
-  def deptSales(s: SparkSession, d: String): DataFrame = {
+    * part is a genuine dimension ⇒ broadcast. Shared ([[Caches.shared]]):
+    * 5 queries read it; Rollup.frame reads [[pivotDeptSales]] instead. */
+  def deptSales(s: SparkSession, d: String): DataFrame =
+    Caches.shared(deptSalesOf(s, d, part(s, d)))
+
+  /** [[deptSales]] of the 9 [[PivotDepts]] only, with the brand filter on
+    * the part side of the join, so it reaches the part scan
+    * (`PushedFilters: [In(p_brand, …)]`). Not shared, like [[chargeSub]]:
+    * its plan is not `deptSales`' plan, so it never reads that cache. */
+  def pivotDeptSales(s: SparkSession, d: String): DataFrame =
+    deptSalesOf(s, d, part(s, d).filter(col("p_brand").isin(PivotDepts: _*)))
+
+  private def deptSalesOf(s: SparkSession, d: String,
+      part: DataFrame): DataFrame = {
     val l = lineitem(s, d)
-    val p = part(s, d).select(col("p_partkey"), col("p_brand").as("deptCode"))
+    val p = part.select(col("p_partkey"), col("p_brand").as("deptCode"))
     l.join(broadcast(p), l("l_partkey") === p("p_partkey"))
       .groupBy(to_date(col("l_shipdate")).as("date"), col("deptCode"))
       .agg(sum(

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Oracle, Q, Tables}
+import graft.{Caches, Oracle, Q, Tables}
 import graft.Tables.StoreId
 import graft.functions.Fns
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -22,14 +22,14 @@ object Rollup {
 
   /** One row per date: till totals ⋈ dept pivot ⋈ store-expense agg ⋈
     * customer-charge agg ⋈ other-payment agg, plus all derived scalars.
-    * Not shared ([[graft.Caches]]): a cached frame would replace the
-    * part scan that dd_rollup's 9-brand filter must reach (PlanSpec).
+    * Shared ([[Caches.shared]]): the doc/dd family reads it. Its pivot
+    * reads [[Tables.pivotDeptSales]], so its build reads only the 9
+    * pivot brands from the part scan (the pushdown PlanSpec pins).
     */
   def frame(s: SparkSession, d: String): DataFrame = {
     val c = Tables.charge(s, d)
 
-    val pvt = Tables.deptSales(s, d)
-      .filter(col("deptCode").isin(Tables.PivotDepts: _*))
+    val pvt = Tables.pivotDeptSales(s, d)
       .groupBy("date").pivot("deptCode", Tables.PivotDepts)
       .agg(sum(col("sellEx")))
 
@@ -52,7 +52,7 @@ object Rollup {
     val otherPay = c.filter(col("tranType") === 14)
       .groupBy("date").agg(sum(col("amount")).as("totalOtherPayments"))
 
-    Tables.tillTotals(s, d)
+    Caches.shared(Tables.tillTotals(s, d)
       .join(pvt, Seq("date"), "left")
       .join(storeExp, Seq("date"), "left")
       .join(custCharges, Seq("date"), "left")
@@ -63,7 +63,7 @@ object Rollup {
       .withColumn("freSales",
         col("totalSales") - col("lineSum") - col("gstSales")
           - (col("totalAccountSales") - coalesce(col("totalExp"), Z))
-          + coalesce(col("totalOtherPayments"), Z))
+          + coalesce(col("totalOtherPayments"), Z)))
   }
 
   /** SQL mirror of [[frame]] as a CTE chain ending in view `r`. */

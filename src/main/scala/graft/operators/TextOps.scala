@@ -306,6 +306,13 @@ object TextOps {
       .filter(size(col("t")) >= 2)
       .select(col("doc_id"), explode(bigrams(col("t"))).as("sx")))
 
+  /** DISTINCT (doc_id, xxhash64 shingle) set of [[nearCloneShingles]] —
+    * the hashed sets dedup_containment and dedup_containment_ensemble
+    * intersect. Shared per session, like [[nearCloneShingles]]. */
+  private[graft] def hashedShingles(s: SparkSession, d: String): DataFrame =
+    graft.Caches.shared(nearCloneShingles(s, d)
+      .select(col("doc_id"), xxhash64(col("sx")).as("s")).distinct())
+
   /** DISTINCT (doc_id, bigram) shingle set of the RAW documents table —
     * the stage txt_df_spectrum, txt_bigram_novelty, txt_contamination
     * and txt_rouge2 all start from (tokenize → explode bigrams →
@@ -457,8 +464,7 @@ object TextOps {
     */
   private[graft] def ensembleStages(s: SparkSession, d: String)
       : (DataFrame, DataFrame, DataFrame) = {
-    val e = graft.Caches.shared(nearCloneShingles(s, d)
-      .select(col("doc_id"), xxhash64(col("sx")).as("s")).distinct())
+    val e = hashedShingles(s, d)
     val sz = e.groupBy("doc_id").agg(count(lit(1)).as("n"))
     val ss = minhashSig(s, d).join(sz, Seq("doc_id"))
       .withColumn("hp",
@@ -1255,8 +1261,7 @@ object TextOps {
          |JOIN sz sb ON b_id = sb.doc_id
          |WHERE 5 * n_inter >= 4 * sa.n
          |ORDER BY a_id, b_id""".stripMargin) { (s, d) =>
-      val e = graft.Caches.shared(nearCloneShingles(s, d)
-        .select(col("doc_id"), xxhash64(col("sx")).as("s")).distinct())
+      val e = hashedShingles(s, d)
       val cand = minhashCandidates(s, d)
       val sz = e.groupBy("doc_id").agg(count(lit(1)).as("n"))
       val inter = cand

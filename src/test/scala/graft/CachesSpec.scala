@@ -56,6 +56,27 @@ class CachesSpec extends SparkSuite {
     assert(Caches.registered == 0)
   }
 
+  test("a stage the budget evicted stays evicted: its next consumer " +
+      "neither persists nor registers it") {
+    Caches.releaseAll()
+    def mk() = Tables.events(spark, SparkSuite.Sf0001)
+      .select(col("event_id")).distinct()
+    val first = Caches.shared(mk()); first.count()
+    assert(Caches.enforceBudget(spark, 0L) >= 1)
+    assert(Caches.evictions >= 1)
+    val again = Caches.shared(mk()); again.count()
+    assert(!(again eq first))
+    assert(!again.storageLevel.useMemory && !cached(again),
+      "the next consumer persisted an evicted stage again")
+    assert(Caches.registered == 0)
+    // releaseAll ends the batch: the stage may be shared again
+    Caches.releaseAll()
+    assert(Caches.evictions == 0)
+    val fresh = Caches.shared(mk()); fresh.count()
+    assert(cached(fresh) && Caches.registered == 1)
+    Caches.releaseAll()
+  }
+
   test("re-registering the same canonical plan is idempotent on release") {
     def mk() = Tables.events(spark, SparkSuite.Sf0001)
       .select(col("user_id")).distinct()
@@ -169,7 +190,9 @@ class CachesSpec extends SparkSuite {
         org.apache.spark.sql.DataFrame](
       operators.TextOps.nearCloneShingles, operators.TextOps.minhashSig,
       operators.TextOps.minhashCandidates, operators.TextOps.lmSuffStats,
-      operators.TextOps.distinctBigramShingles)
+      operators.TextOps.distinctBigramShingles,
+      operators.TextOps.hashedShingles, Tables.charge, Tables.tillTotals,
+      Tables.deptSales, operators.Rollup.frame)
     for (stage <- stages) {
       val first = stage(spark, SparkSuite.Sf0001)
       val before = Caches.registered
