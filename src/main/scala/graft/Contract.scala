@@ -1,6 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.functions.{col, length}
 import org.apache.spark.sql.types._
 
 /** Testdata schema contract + tripwire (VERDICT r6 #2).
@@ -19,6 +21,10 @@ import org.apache.spark.sql.types._
   * `to_date`/direct comparison handle. Widening a set here without
   * widening the reader (or vice versa) is the bug this file exists to
   * catch in review.
+  *
+  * [[preflight]] checks metadata only and starts no Spark job. The
+  * data invariant the DuckDB oracle's parity rests on,
+  * [[asciiPreflight]], is Verify's: only Verify compares with DuckDB.
   */
 object Contract {
 
@@ -112,6 +118,8 @@ object Contract {
     violationsOf(actualSchemas(s, dir))
 
   /** Throw ONE labeled failure if the testdata contract is broken.
+    * Metadata only: every schema comes from a parquet footer read on
+    * the driver ([[Tables.schema]]), so preflight starts no Spark job.
     * Verify calls this before running any query, so schema drift reads
     * as a single remediation message instead of N analysis errors. */
   def preflight(s: SparkSession, dir: String): Unit = {
@@ -121,27 +129,33 @@ object Contract {
         "handle these shapes; extend the reader dispatch (e.g. " +
         "Tables.normalizeTs for events.ts) AND the matching Contract " +
         "entry together:\n  " + v.mkString("\n  "))
-    asciiPreflight(s, dir)
   }
+
+  /** True where a text holds a character outside ASCII: its length in
+    * characters differs from its length in UTF-8 bytes. */
+  def nonAscii(text: Column): Column =
+    length(text) =!= length(text.cast(BinaryType))
 
   /** mm-family ASCII invariant (ADVICE r11): the mm_decode_wav/png
     * oracles equate DuckDB's CHARACTER-based substr/md5 with the
     * engine's UTF-8 BYTE md5 — sound only while documents.text is pure
     * ASCII (char-substr ≡ byte-substr there). The corpus generator
     * emits ASCII, but nothing enforced it; a single non-ASCII document
-    * would flip those oracle verdicts silently. Assert the invariant
-    * once per Verify run (one codegen'd rlike scan over documents —
-    * sub-second even at sf1) so a drift fails HERE with a name, not
-    * downstream as an unexplained mm-family hash mismatch. */
+    * would flip those oracle verdicts silently. It guards DuckDB oracle
+    * parity, so it is Verify's check, not [[preflight]]'s: Verify
+    * asserts it once per run, right after preflight, so a drift fails
+    * HERE with a name, not downstream as an unexplained mm-family hash
+    * mismatch. One job over documents, each task stopping at its first
+    * offending row; the offenders are counted only for the message. */
   def asciiPreflight(s: SparkSession, dir: String): Unit = {
-    import org.apache.spark.sql.functions.col
-    val n = Tables.documents(s, dir)
-      .filter(col("text").rlike("[^\\x00-\\x7F]")).count()
-    if (n > 0) throw new IllegalStateException(
-      s"mm-family ASCII invariant broken in $dir: $n documents.text " +
-        "rows contain non-ASCII characters; the mm_decode_* oracles' " +
-        "char-substr ≡ byte-substr equivalence no longer holds — " +
-        "rewrite those oracles over encode(text) bytes before trusting " +
-        "their verdicts")
+    val bad = Tables.documents(s, dir).filter(nonAscii(col("text")))
+    val found = s.sparkContext.runJob(bad.queryExecution.toRdd,
+      (rows: Iterator[InternalRow]) => rows.hasNext)
+    if (found.contains(true)) throw new IllegalStateException(
+      s"mm-family ASCII invariant broken in $dir: ${bad.count()} " +
+        "documents.text rows contain non-ASCII characters; the " +
+        "mm_decode_* oracles' char-substr ≡ byte-substr equivalence no " +
+        "longer holds — rewrite those oracles over encode(text) bytes " +
+        "before trusting their verdicts")
   }
 }

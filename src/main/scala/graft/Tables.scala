@@ -34,15 +34,40 @@ object Tables {
     * (`"10528"` in /root/reference/src/queries.ts:95,107). */
   val StoreId = "42"
 
-  /** The schema of table `name` in `dir`, inferred from its parquet
-    * footer once per session and read under [[ensureNanosAsLong]], so
-    * it is the type the file actually has (an ns-vintage `events.ts`
-    * is BIGINT). `Contract.preflight` fills it for every contracted
-    * table; a dir preflight never saw infers on its first read. */
+  /** The schema of table `name` in `dir`, read from its parquet footer
+    * on the driver once per session: no Spark job, whether or not
+    * `Contract.preflight` saw the dir. It is the schema a parquet read
+    * of the path infers (the same footer, the same converter under the
+    * session conf, nullable as Spark makes every file-source schema),
+    * read under [[ensureNanosAsLong]], so it is the type the file
+    * actually has (an ns-vintage `events.ts` is BIGINT). A directory
+    * table reads its first data file by path, the file Spark's own
+    * inference picks; a path with no data file throws. */
   def schema(s: SparkSession, dir: String, name: String): StructType = {
     ensureNanosAsLong(s)
-    Caches.memo(s, ("schema", dir, name))(
-      s.read.parquet(s"$dir/$name.parquet").schema)
+    Caches.memo(s, ("schema", dir, name))(footerSchema(s, s"$dir/$name.parquet"))
+  }
+
+  private def footerSchema(s: SparkSession, path: String): StructType = {
+    import org.apache.hadoop.fs.Path
+    import org.apache.parquet.format.converter.ParquetMetadataConverter
+    import org.apache.parquet.hadoop.Footer
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.spark.sql.execution.datasources.parquet._
+    val conf = s.sessionState.newHadoopConf()
+    val root = new Path(path)
+    val fs = root.getFileSystem(conf)
+    val file = fs.listStatus(root).filter { st =>
+      val n = st.getPath.getName
+      st.isFile && !n.startsWith("_") && !n.startsWith(".")
+    }.minByOption(_.getPath.toString).getOrElse(
+      throw new IllegalArgumentException(s"no parquet data file in $path"))
+    val footer = ParquetFooterReader.readFooter(
+      HadoopInputFile.fromStatus(file, conf),
+      ParquetMetadataConverter.SKIP_ROW_GROUPS)
+    org.apache.spark.sql.GraftSqlBridge.asNullable(
+      ParquetFileFormat.readSchemaFromFooter(new Footer(file.getPath, footer),
+        new ParquetToSparkSchemaConverter(s.sessionState.conf)))
   }
 
   def read(spark: SparkSession, dir: String, name: String): DataFrame =

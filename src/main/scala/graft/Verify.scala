@@ -1,5 +1,6 @@
 package graft
 import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -17,6 +18,8 @@ object Verify {
     // schema tripwire (VERDICT r6 #2): drift = one labeled failure here,
     // not N opaque per-query analysis errors below
     Contract.preflight(spark, sfDir)
+    // the char≡byte invariant the mm-family oracles rest on
+    Contract.asciiPreflight(spark, sfDir)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }
@@ -27,23 +30,17 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .filter { case (k, _) => only.isEmpty || only(k) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), oracleJson(
+      SparkEntry.oracleSql.filter { case (k, _) => only.isEmpty || only(k) }))
     Caches.releaseAll() // release the queries' session-shared persists
     spark.stop()
   }
+
+  /** oracle_sql.json: query name → DuckDB SQL, written by Jackson, which
+    * escapes quotes, backslashes and every control character — a tab or
+    * CR in a query's SQL would otherwise make the file unparseable and
+    * silently drop every oracle comparison. */
+  def oracleJson(sql: Map[String, String]): String =
+    new com.fasterxml.jackson.databind.ObjectMapper()
+      .writeValueAsString(new java.util.TreeMap[String, String](sql.asJava))
 }

@@ -1681,10 +1681,7 @@ object TextOps {
          |WHERE wc.cnt * 65 > tot.n_terms
          |ORDER BY 1, 2""".stripMargin) { (s, d) =>
       import s.implicits._
-      val schema = s.read.option("pathGlobFilter", "documents.parquet")
-        .parquet(d).schema
-      val items = s.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet").parquet(d)
+      val items = graft.streaming.Feeds.source(s, d, "documents")
         .select(col("source").as("key"), explode(toks(col("text"))).as("item"))
         .as[graft.streaming.StreamFreq.Item]
       val feed = graft.streaming.StreamFreq

@@ -91,9 +91,9 @@ class ContractSpec extends SparkSuite {
     // window sums). That is a FIXTURE invariant, not a law — pin it
     // here so a regenerated multi-byte corpus fails one labeled test
     // instead of producing silent byte/char drift in five queries.
-    import org.apache.spark.sql.functions.{col, length}
+    import org.apache.spark.sql.functions.col
     val multiByte = (df: org.apache.spark.sql.DataFrame) =>
-      df.filter(length(col("text")) =!= length(col("text").cast("binary")))
+      df.filter(Contract.nonAscii(col("text")))
     for (sf <- Seq(SparkSuite.Sf0001, SparkSuite.Sf001,
         "/root/testdata/sf0.1")) {
       val n = multiByte(Tables.documents(spark, sf)).count()
@@ -106,6 +106,17 @@ class ContractSpec extends SparkSuite {
     import spark.implicits._
     val bad = Seq("plain ascii", "café au lait").toDF("text")
     assert(multiByte(bad).count() == 1)
+  }
+
+  test("asciiPreflight names a multi-byte documents payload") {
+    import spark.implicits._
+    val tmp = java.nio.file.Files.createTempDirectory("multibyte").toString
+    Seq((1L, "plain ascii"), (2L, "café au lait")).toDF("doc_id", "text")
+      .coalesce(1).write.parquet(s"$tmp/documents.parquet")
+    Contract.asciiPreflight(spark, SparkSuite.Sf0001) // the shipped corpus passes
+    val e = intercept[IllegalStateException](Contract.asciiPreflight(spark, tmp))
+    assert(e.getMessage.contains("mm-family ASCII invariant broken"))
+    assert(e.getMessage.contains(": 1 documents.text rows"))
   }
 
   /** Jobs started while `body` runs (after the listener bus drains). */
@@ -140,15 +151,64 @@ class ContractSpec extends SparkSuite {
     assert(jobs == 0)
   }
 
-  test("a dir preflight never saw infers its schema on the first read only") {
+  /** A fresh copy of the sf0.001 tables: a dir no session has read. */
+  private def freshCopy(): String = {
+    val tmp = java.nio.file.Files.createTempDirectory("fresh")
+    new java.io.File(SparkSuite.Sf0001).listFiles().foreach(f =>
+      java.nio.file.Files.copy(f.toPath, tmp.resolve(f.getName)))
+    tmp.toString
+  }
+
+  test("preflight and every reader on a fresh dir start no Spark job") {
+    assert(jobsDuring(Contract.preflight(spark, freshCopy())) == 0)
+    // a second copy, so the readers run on a dir preflight never saw
+    val unseen = freshCopy()
+    val jobs = jobsDuring {
+      Contract.expected.keys.foreach(t => Tables.read(spark, unseen, t))
+      Tables.events(spark, unseen)
+      graft.streaming.Feeds.source(spark, unseen, "events")
+      graft.streaming.Feeds.source(spark, unseen, "documents")
+    }
+    assert(jobs == 0)
+  }
+
+  test("the footer schema is the schema Spark infers, for every table") {
+    val sf01 = new java.io.File(SparkSuite.Sf001).getParent + "/sf0.1"
+    for (d <- Seq(SparkSuite.Sf0001, SparkSuite.Sf001, sf01);
+        t <- Contract.expected.keys) {
+      val footer = Tables.schema(spark, d, t)
+      assert(footer == spark.read.parquet(s"$d/$t.parquet").schema, s"$d/$t")
+    }
+    // a Spark-written directory table, with _SUCCESS and .crc files and
+    // non-null columns (the inferred schema is nullable)
+    val tmp = java.nio.file.Files.createTempDirectory("dirtable").toString
+    spark.range(10).selectExpr("id", "cast(id as int) as k",
+        "array(cast(id as float)) as v", "named_struct('a', id) as s")
+      .repartition(3).write.parquet(s"$tmp/t.parquet")
+    assert(Tables.schema(spark, tmp, "t") ==
+      spark.read.parquet(s"$tmp/t.parquet").schema)
+  }
+
+  test("a dir preflight never saw reads its schema without a job") {
     val tmp = java.nio.file.Files.createTempDirectory("unseen").toString
     spark.range(3).selectExpr("cast(id as int) as r_regionkey",
         "cast(id as string) as r_name")
       .write.parquet(s"$tmp/region.parquet")
-    assert(jobsDuring(Tables.region(spark, tmp)) >= 1)
+    assert(jobsDuring(Tables.region(spark, tmp)) == 0)
     assert(jobsDuring(Tables.region(spark, tmp)) == 0)
     assert(Tables.region(spark, tmp).count() == 3)
     assert(Tables.schema(spark, tmp, "region").fieldNames.toSeq ==
       Seq("r_regionkey", "r_name"))
+  }
+
+  test("a table path with no data file fails loudly") {
+    val tmp = java.nio.file.Files.createTempDirectory("nodata")
+    java.nio.file.Files.createDirectory(tmp.resolve("region.parquet"))
+    java.nio.file.Files.createFile(tmp.resolve("region.parquet/_SUCCESS"))
+    val e = intercept[IllegalArgumentException](
+      Tables.schema(spark, tmp.toString, "region"))
+    assert(e.getMessage.contains("no parquet data file"))
+    assert(Contract.violations(spark, tmp.toString)
+      .contains("region: table missing from testdata dir"))
   }
 }

@@ -39,6 +39,17 @@ class EntrySpec extends SparkSuite {
       "the SET prelude must LEAD the first oracle's text")
   }
 
+  test("oracle_sql.json round-trips every control character") {
+    val sql = "SELECT 'a\"b' AS q, '\\' AS bs, '\t' AS tab, '\r' AS cr, " +
+      "'\u0001' AS soh\nFROM t"
+    val json = Verify.oracleJson(Map("q1" -> sql, "q\"2" -> "SELECT 1"))
+    assert(!json.exists(_ < ' '), "raw control character in the JSON text")
+    val back = new com.fasterxml.jackson.databind.ObjectMapper().readTree(json)
+    assert(back.size == 2)
+    assert(back.get("q1").asText == sql)
+    assert(back.get("q\"2").asText == "SELECT 1")
+  }
+
   test("query names are unique (a collision silently drops a query)") {
     val names = SparkEntry.allNames
     val dups = names.groupBy(identity).collect { case (n, v) if v.size > 1 => n }

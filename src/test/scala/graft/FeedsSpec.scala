@@ -117,14 +117,20 @@ class FeedsSpec extends SparkSuite {
   }
 
   test("streaming sources read the session's schema, never infer their own") {
-    val dir = new java.io.File("src/main/scala/graft/streaming")
-    assert(dir.isDirectory, s"missing source dir $dir")
+    // every main source, batch operators included (stream_freq_feed
+    // builds its stream in TextOps), matched over the whole file text
+    // so a call split across lines is caught too
+    val root = java.nio.file.Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"missing source dir $root")
     val inference = """\.parquet\([^)]*\)\s*\.schema\b""".r
-    val offenders = for {
-      f <- dir.listFiles().toSeq.filter(_.getName.endsWith(".scala"))
-      (line, i) <- Files.readAllLines(f.toPath).asScala.zipWithIndex
-      if inference.findFirstIn(line).nonEmpty
-    } yield s"${f.getName}:${i + 1}: ${line.trim}"
+    val files = Files.walk(root)
+    val offenders = try for {
+      f <- files.iterator.asScala.toSeq if f.toString.endsWith(".scala")
+      text = Files.readString(f)
+      m <- inference.findAllMatchIn(text)
+    } yield s"${root.relativize(f)}:${text.take(m.start).count(_ == '\n') + 1}: " +
+      m.matched.replaceAll("\\s+", " ")
+    finally files.close()
     assert(offenders.isEmpty,
       "take a stream's schema from Feeds.source / Tables.schema:\n" +
         offenders.mkString("\n"))
