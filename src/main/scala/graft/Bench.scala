@@ -23,6 +23,9 @@ object Bench {
 
   private val json = new com.fasterxml.jackson.databind.ObjectMapper
 
+  /** `s` as a JSON string literal, control characters escaped. */
+  private[graft] def jstr(s: String): String = json.writeValueAsString(s)
+
   /** The per-query seconds of an artifact's `queries` object, empty
     * when there is none. */
   private[graft] def queriesMap(txt: String): Map[String, Double] =
@@ -305,7 +308,6 @@ object Bench {
       else flagged.map { case (name, sec) =>
         (name, sec, isolated.getOrElse(name, -1.0), baseline(name))
       }
-    def jstr(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
     val qs = results.map { case (k, v, _, _, _) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val qsSteady = results.map { case (k, _, v, _, _) => "\"" + k + "\":" + v }

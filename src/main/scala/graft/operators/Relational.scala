@@ -428,7 +428,6 @@ object Relational {
         |FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
         |WHERE o.o_totalprice > 495000
         |GROUP BY l.l_orderkey ORDER BY l.l_orderkey""".stripMargin) { (s, d) =>
-      graft.plans.BloomMightContain.register(s)
       val sel = Tables.orders(s, d)
         .filter(col("o_totalprice") > 495000)
         .select("o_orderkey")

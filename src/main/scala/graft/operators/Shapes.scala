@@ -159,7 +159,6 @@ object Shapes {
         |                            ORDER BY o_totalprice DESC, o_orderkey) AS rn
         |  FROM orders) t
         |WHERE rn <= 3 ORDER BY o_custkey, rn""".stripMargin) { (s, d) =>
-      graft.plans.TopKPerKey.install(s)
       // project BEFORE the custom node: TopKPerKeyPlan declares
       // references = all child columns (the ColumnPruning survival
       // contract), so pruning must happen upstream of it or the scan

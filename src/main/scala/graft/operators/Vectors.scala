@@ -34,11 +34,8 @@ object Vectors {
     * as a bare loop inside whole-stage codegen instead of an
     * interpreted higher-order lambda: the vectors family's hottest
     * kernel, evaluated millions of times per query. */
-  private def dot(a: Column, b: Column): Column = {
-    org.apache.spark.sql.SparkSession.getActiveSession
-      .foreach(graft.plans.VectorDot.register)
+  private def dot(a: Column, b: Column): Column =
     call_function("vector_dot", a, b)
-  }
 
   private def dotSql(a: String, b: String): String =
     (1 to Dim).map(i =>
@@ -230,11 +227,6 @@ object Vectors {
     // interpreted its lambda per element, (corpus × nlist × Dim) times
     // per Lloyd step; integer addition is associative so the results
     // are identical
-    // register on the session that builds the plan (ADVICE r14): the
-    // thread's active session is not necessarily `s` — e.g. a plan
-    // built for a cloned/background session would fail analysis on
-    // call_function("vector_l2sq") if only the active one was registered
-    graft.plans.VectorL2Sq.register(s)
     def distStructs(e: Column): Column = array(centroids.map { case (lid, cv) =>
       val lits = array(cv.map(lit): _*)
       struct(call_function("vector_l2sq", e, lits).as("dist"),
@@ -593,8 +585,6 @@ object Vectors {
     * higher-order lambda on the PQ encode/ADC hot path. */
   private def pqDist(sub: Column, m: Int, k: Int): Column = {
     val cb = array((0 until PqSub).map(j => lit(pqCb(m, k, j))): _*)
-    org.apache.spark.sql.SparkSession.getActiveSession
-      .foreach(graft.plans.VectorSqDist.register)
     call_function("vector_sqdist", sub, cb)
   }
 

@@ -1,6 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeReference, NamedExpression}
 import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -17,12 +17,8 @@ import graft.operators.Temporal
   * planning citizen — a future rule could choose a different physical
   * shape (e.g. a sort-merge as-of) without touching any caller.
   *
-  * Registration paths:
-  *  - running session: `AsOfJoinPlan.install(spark)` — appends the
-  *    lowering to `spark.experimental.extraOptimizations`, Spark's
-  *    public hot-attach hook for optimizer rules;
-  *  - session build / cluster deploy:
-  *    `spark.sql.extensions=graft.plans.GraftExtensions`.
+  * The lowering is registered with the rest of graft's extensions
+  * ([[Functions]]).
   *
   * The node reports itself resolved once its children are (its output
   * is fixed at construction), so it passes analysis untouched and the
@@ -53,8 +49,8 @@ final case class AsOfJoinPlan(
 object AsOfJoinPlan {
 
   /** Build a DataFrame whose plan contains the custom operator node.
-    * Requires [[install]] (or the extensions class) — without a
-    * registered lowering the planner has no strategy for the node. */
+    * Requires the lowering ([[Functions]]) — without it the planner has
+    * no strategy for the node. */
   def asOf(left: DataFrame, right: DataFrame, keys: Seq[String], ts: String,
            payload: Seq[String]): DataFrame = {
     val lp = left.queryExecution.analyzed
@@ -72,11 +68,11 @@ object AsOfJoinPlan {
   final case class Lowering(spark: SparkSession) extends Rule[LogicalPlan] {
     override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
       case n: AsOfJoinPlan =>
-        // substitute the OPTIMIZED subtree: extraOptimizations is the
-        // LAST optimizer batch, so an analyzed-only substitution would
-        // execute without column pruning / constant folding (the
-        // extensions path re-optimizes anyway; for it this is a no-op
-        // cost). Cross-boundary pushdown from operators above the node
+        // substitute the OPTIMIZED subtree: registerAll installs the
+        // rule in the LAST optimizer batch, so an analyzed-only
+        // substitution would execute without column pruning / constant
+        // folding (the extensions path re-optimizes anyway; for it this
+        // is a no-op cost). Cross-boundary pushdown from operators above the node
         // still needs the extensions path — documented trade-off.
         val lowered = Temporal.asOf(
           GraftSqlBridge.ofRows(spark, n.left),
@@ -88,45 +84,5 @@ object AsOfJoinPlan {
           }
         Project(pinned, lowered)
     }
-  }
-
-  /** Hot-attach the lowering to a running session (idempotent). */
-  def install(spark: SparkSession): Unit = {
-    val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    if (!classic.experimental.extraOptimizations.exists(_.isInstanceOf[Lowering]))
-      classic.experimental.extraOptimizations ++= Seq(Lowering(spark))
-  }
-}
-
-/** `spark.sql.extensions` entry point for session-build registration:
-  * the optimizer-rule lowering (as-of), the planner strategy (top-k),
-  * and the native SQL functions — one class wires the whole extension
-  * surface into any session, cluster deploys included. */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectOptimizerRule(spark => AsOfJoinPlan.Lowering(spark))
-    e.injectPlannerStrategy(_ => TopKStrategy)
-    // arity-check in the builder: analysis surfaces the message; without
-    // it a wrong-arity SQL call dies as an IndexOutOfBounds internal error
-    def arity(name: String, want: Int,
-        exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]): Unit =
-      require(exprs.length == want,
-        s"$name expects $want arguments, got ${exprs.length}")
-    e.injectFunction((
-      new org.apache.spark.sql.catalyst.FunctionIdentifier("due_date"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[DueDateExpression].getName, "due_date"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        arity("due_date", 3, exprs)
-        DueDateExpression(exprs(0), exprs(1), exprs(2))
-      }))
-    e.injectFunction((
-      new org.apache.spark.sql.catalyst.FunctionIdentifier("bloom_might_contain"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[BloomMightContain].getName, "bloom_might_contain"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        arity("bloom_might_contain", 2, exprs)
-        BloomMightContain(exprs(0), exprs(1))
-      }))
   }
 }

@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
@@ -81,14 +80,6 @@ case class BloomMightContain(left: Expression, right: Expression)
 }
 
 object BloomMightContain {
-  /** Register `bloom_might_contain` so it is callable from SQL and via
-    * `call_function` (same pattern as [[DueDateExpression.register]]). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bloom_might_contain",
-      exprs => BloomMightContain(exprs(0), exprs(1)),
-      "built-in")
-
   /** Serialize a built filter for use as the BINARY literal argument. */
   def serialize(bloom: BloomFilter): Array[Byte] = {
     val bo = new java.io.ByteArrayOutputStream()

@@ -1,7 +1,6 @@
 package graft.plans
 
 import java.time.LocalDate
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -107,14 +106,4 @@ case class DueDateExpression(first: Expression, second: Expression,
     copy(first = newFirst, second = newSecond, third = newThird)
 
   override def prettyName: String = "due_date"
-}
-
-object DueDateExpression {
-  /** Register `due_date` in the session's function registry so it is
-    * callable from SQL and via `call_function("due_date", …)`. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "due_date",
-      exprs => DueDateExpression(exprs(0), exprs(1), exprs(2)),
-      "built-in")
 }

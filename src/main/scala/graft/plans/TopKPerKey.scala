@@ -3,7 +3,7 @@ package graft.plans
 import scala.collection.mutable
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, AttributeReference, AttributeSet, BaseOrdering, Descending, JoinedRow, SortOrder, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.expressions.codegen.GenerateOrdering
@@ -15,8 +15,7 @@ import org.apache.spark.sql.types.IntegerType
 /** Per-key top-k as a FIRST-CLASS physical operator — the full (c)-tier
   * extension shape from SURVEY §7.3: custom `LogicalPlan` + planner
   * `SparkStrategy` + `SparkPlan` with a real `doExecute`, registered
-  * through `SparkSessionExtensions.injectPlannerStrategy` (or hot-attached
-  * via `spark.experimental.extraStrategies`). [[AsOfJoinPlan]] demonstrates
+  * with the rest of graft's extensions ([[Functions]]). [[AsOfJoinPlan]] demonstrates
   * the optimizer-rule lowering tier (custom node → built-in composition);
   * this operator goes one level deeper: the planner maps the node to a
   * bespoke execution operator Spark does not have.
@@ -215,20 +214,13 @@ object TopKPerKey {
 
   /** Top-k rows per key with a 1-based rank column appended — identical
     * output to `row_number().over(Window.partitionBy(keys).orderBy(order))
-    * <= k`, without sorting any partition. Requires [[install]] (or
-    * `spark.sql.extensions=graft.plans.GraftExtensions`). */
+    * <= k`, without sorting any partition. Requires the strategy
+    * ([[Functions]]). */
   def topK(df: DataFrame, keys: Seq[String], order: Seq[(String, Boolean)],
            k: Int, rankName: String = "rn"): DataFrame = {
     val lp = df.queryExecution.analyzed
     val rank = AttributeReference(rankName, IntegerType, nullable = false)()
     GraftSqlBridge.ofRows(df.sparkSession,
       TopKPerKeyPlan(lp, keys, order, k, lp.output :+ rank))
-  }
-
-  /** Hot-attach the strategy to a running session (idempotent). */
-  def install(spark: SparkSession): Unit = {
-    val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    if (!classic.experimental.extraStrategies.contains(TopKStrategy))
-      classic.experimental.extraStrategies ++= Seq(TopKStrategy)
   }
 }

@@ -1,8 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.functions._
-import graft.plans.{AsOfJoinPlan, GraftExtensions}
+import graft.plans.AsOfJoinPlan
 import graft.operators.Temporal
 
 /** The custom Catalyst as-of operator must carry its semantics through
@@ -22,7 +21,6 @@ class AsOfJoinPlanSpec extends SparkSuite {
   }
 
   test("node ≡ direct composition; lowered out of the physical plan") {
-    AsOfJoinPlan.install(spark)
     val (left, right) = fixtures
     val viaNode = AsOfJoinPlan.asOf(left, right, Seq("k"), "ts", Seq("v"))
     assert(viaNode.queryExecution.analyzed.toString.contains("AsOfJoinPlan"),
@@ -35,7 +33,6 @@ class AsOfJoinPlanSpec extends SparkSuite {
   }
 
   test("downstream operators on the node's output resolve (exprId pinning)") {
-    AsOfJoinPlan.install(spark)
     val (left, right) = fixtures
     val out = AsOfJoinPlan.asOf(left, right, Seq("k"), "ts", Seq("v"))
       .filter(col("asof_v").isNotNull)
@@ -44,14 +41,5 @@ class AsOfJoinPlanSpec extends SparkSuite {
       .collect().map(r => (r.getLong(0), r.getDouble(1)))
     // k=1: ts=5 no match, ts=15 → v=2.5; k=2: ts=9 → v=9.0
     assert(out.toSeq == Seq((1L, 2.5), (2L, 9.0)))
-  }
-
-  test("install is idempotent; the extensions class injects the rule") {
-    AsOfJoinPlan.install(spark)
-    AsOfJoinPlan.install(spark)
-    val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    assert(classic.experimental.extraOptimizations
-      .count(_.isInstanceOf[AsOfJoinPlan.Lowering]) == 1)
-    new GraftExtensions().apply(new SparkSessionExtensions) // must not throw
   }
 }

@@ -17,4 +17,11 @@ class BenchSpec extends AnyFunSuite {
     assert(Bench.queriesMap(compact) == want)
     assert(Bench.queriesMap("""{"metric":"total"}""").isEmpty)
   }
+
+  test("jstr keeps an error message valid JSON: control chars, quotes, backslashes") {
+    val msg = "boom\u0001 \"quoted\" C:\\tmp \u001f"
+    val obj = "{\"q\":" + Bench.jstr(msg) + "}"
+    val back = new com.fasterxml.jackson.databind.ObjectMapper().readTree(obj)
+    assert(back.get("q").asText == msg)
+  }
 }

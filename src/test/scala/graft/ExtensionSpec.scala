@@ -2,7 +2,6 @@ package graft
 
 import graft.SparkSuite.{Sf0001, Sf001}
 import graft.functions.{Fns, PosEntry, PosIdAggregator}
-import graft.plans.DueDateExpression
 import graft.sources.{RestSource, Sinks}
 import org.apache.spark.sql.functions._
 
@@ -13,7 +12,6 @@ class ExtensionSpec extends SparkSuite {
   import spark.implicits._
 
   test("due_date native expression ≡ built-in combo (codegen path)") {
-    DueDateExpression.register(spark)
     val df = Tables.charge(spark, Sf001).filter(col("id") % 53 === 0)
       .join(broadcast(Tables.terms(spark, Sf001)), Seq("customerId"))
     val cmp = df.select(
@@ -25,7 +23,6 @@ class ExtensionSpec extends SparkSuite {
   }
 
   test("due_date works from SQL and keeps the null-terms EOM branch") {
-    DueDateExpression.register(spark)
     val r = spark.sql(
       """SELECT due_date(DATE'2024-01-31', CAST(NULL AS STRING), 5) AS d,
         |       due_date(DATE'2023-12-15', 'OFFOLLOWINGMONTH', 31) AS roll,
@@ -38,7 +35,6 @@ class ExtensionSpec extends SparkSuite {
 
   test("bloom_might_contain: no false negatives, useful fpp, codegen'd") {
     import graft.plans.BloomMightContain
-    BloomMightContain.register(spark)
     val members = (0L until 500L).map(_ * 7)
     val bloom = org.apache.spark.util.sketch.BloomFilter.create(1000, 0.03)
     members.foreach(bloom.putLong)
@@ -74,7 +70,6 @@ class ExtensionSpec extends SparkSuite {
     assert(got == twin)
     // the bloom filter must actually prune: rows surviving the scan
     // filter ≪ the table, ≥ the true matches
-    graft.plans.BloomMightContain.register(spark)
     val bytes = graft.plans.BloomMightContain.serialize(
       sel.stat.bloomFilter("o_orderkey", 100000L, 0.03))
     val full = Tables.lineitem(spark, d).count()
@@ -90,7 +85,6 @@ class ExtensionSpec extends SparkSuite {
 
   test("vector_dot codegen'd expression ≡ the composed higher-order " +
       "fold bit-for-bit on real embeddings; nulls and mismatches null") {
-    graft.plans.VectorDot.register(spark)
     // bit-identity against the exact composed form it replaced, over
     // every corpus vector × a literal double plane AND float × float
     val planeArr = array((1 to operators.Vectors.Dim)
@@ -128,7 +122,6 @@ class ExtensionSpec extends SparkSuite {
 
   test("vector_sqdist codegen'd expression ≡ the composed (x−c)² fold " +
       "bit-for-bit on real PQ sub-vectors") {
-    graft.plans.VectorSqDist.register(spark)
     val cb = array((0 until operators.Vectors.PqSub)
       .map(j => lit(operators.Vectors.pqCb(2, 1, j))): _*)
     val sub = slice(col("embedding"),
@@ -295,6 +288,19 @@ class ExtensionSpec extends SparkSuite {
       }
       assert(err.getMessage.contains("3 arguments") ||
         err.getMessage.contains("expects 3"), err.getMessage)
+      // …and the other four: the three vector folds and the bloom probe
+      val bloom = org.apache.spark.util.sketch.BloomFilter.create(10, 0.03)
+      bloom.putLong(7L)
+      val hex = graft.plans.BloomMightContain.serialize(bloom)
+        .map("%02x".format(_)).mkString
+      val v = ext.sql(
+        s"""SELECT vector_dot(array(1.0f, 2.0f), array(3.0d, 4.0d)) AS dot,
+           |       vector_sqdist(array(1.0d, 2.0d), array(3.0d, 4.0d)) AS sq,
+           |       vector_l2sq(array(1L, 2L), array(3L, 5L)) AS l2,
+           |       bloom_might_contain(7L, X'$hex') AS hit
+           |""".stripMargin).head
+      assert(v.getDouble(0) == 11.0 && v.getDouble(1) == 8.0 &&
+        v.getLong(2) == 13L && v.getBoolean(3))
       // (2) injected planner strategy: topK plans without install()
       import ext.implicits._
       val df = Seq(("a", 2.0, 1L), ("a", 5.0, 2L), ("b", 1.0, 3L))
@@ -318,7 +324,6 @@ class ExtensionSpec extends SparkSuite {
 
   test("vector_l2sq codegen'd expression ≡ the composed integer " +
       "(x−c)² fold on real quantized embeddings; nulls and mismatches") {
-    graft.plans.VectorL2Sq.register(spark)
     // the exact composed form ivfDataFitTopK used: xq = floor(x·1000)
     // as ARRAY<BIGINT> against a literal long centroid
     val xq = transform(col("embedding"),
@@ -345,5 +350,137 @@ class ExtensionSpec extends SparkSuite {
       spark.sql("SELECT vector_l2sq(array(1.0d), array(2.0d))").collect()
     }
     assert(err.getMessage.contains("vector_l2sq"))
+  }
+
+  test("registerAll is idempotent: one rule, one strategy") {
+    graft.plans.Functions.registerAll(spark)
+    graft.plans.Functions.registerAll(spark)
+    val x = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].experimental
+    assert(x.extraOptimizations
+      .count(_.isInstanceOf[graft.plans.AsOfJoinPlan.Lowering]) == 1)
+    assert(x.extraStrategies.count(_ eq graft.plans.TopKStrategy) == 1)
+  }
+
+  test("every graft SQL function names itself and its arity on a wrong-arity call") {
+    def msgs(t: Throwable): List[String] =
+      if (t == null) Nil else Option(t.getMessage).toList ::: msgs(t.getCause)
+    Seq(
+      ("vector_dot", "array(1.0d)", 2),
+      ("vector_sqdist", "array(1.0d), array(1.0d), array(1.0d)", 2),
+      ("vector_l2sq", "array(1L)", 2),
+      ("due_date", "DATE'2024-01-31', 'X'", 3),
+      ("bloom_might_contain", "1L", 2)).foreach { case (fn, args, n) =>
+      val err = intercept[Exception](spark.sql(s"SELECT $fn($args)").collect())
+      assert(msgs(err).exists(_.contains(s"$fn expects $n arguments")),
+        s"$fn: ${msgs(err)}")
+    }
+  }
+
+  test("property: each vector fold's eval and its generated code ≡ the " +
+      "composed aggregate(zip_with) fold, bit for bit") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.{Column, Row}
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression}
+    import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    import org.apache.spark.sql.types._
+    import org.scalacheck.Gen
+    import graft.plans.{VectorDot, VectorL2Sq, VectorSqDist}
+    // lengths 0..80; either side null 1 time in 10; the right side one
+    // element longer or shorter 1 time in 8
+    def pairs[A, B](ga: Gen[A], gb: Gen[B]): Gen[(Option[Seq[A]], Option[Seq[B]])] =
+      for {
+        n <- Gen.choose(0, 80)
+        skew <- Gen.frequency(14 -> 0, 1 -> 1, 1 -> -1)
+        a <- Gen.listOfN(n, ga)
+        b <- Gen.listOfN(math.max(0, n + skew), gb)
+        na <- Gen.choose(0, 9)
+        nb <- Gen.choose(0, 9)
+      } yield (Option.when(na > 0)(a), Option.when(nb > 0)(b))
+    def bits(v: Option[Any]): Option[Long] = v.map {
+      case d: Double => java.lang.Double.doubleToRawLongBits(d)
+      case l: Long => l
+    }
+    // returns the composed results, for the coverage checks below
+    def check(name: String, ta: DataType, tb: DataType,
+        rows: Seq[(Option[Seq[Any]], Option[Seq[Any]])],
+        kernel: (Expression, Expression) => Expression,
+        step: (Column, Column) => Column, zero: Column): Seq[Option[Any]] = {
+      val schema = StructType(Seq(StructField("id", IntegerType),
+        StructField("a", ArrayType(ta)), StructField("b", ArrayType(tb))))
+      val df = spark.createDataFrame(rows.zipWithIndex.map { case ((a, b), i) =>
+        Row(i, a.orNull, b.orNull) }.asJava, schema)
+      val want = df.orderBy("id")
+        .select(aggregate(zip_with(col("a"), col("b"), step), zero, _ + _))
+        .collect().map(r => Option(r.get(0))).toSeq
+      val k = kernel(BoundReference(0, ArrayType(ta), nullable = true),
+        BoundReference(1, ArrayType(tb), nullable = true))
+      val generated = GenerateUnsafeProjection.generate(Seq(k))
+      rows.zip(want).zipWithIndex.foreach { case (((a, b), w), i) =>
+        val in = InternalRow(a.map(new GenericArrayData(_)).orNull,
+          b.map(new GenericArrayData(_)).orNull)
+        val out = generated(in)
+        val cg = if (out.isNullAt(0)) None else Some(out.get(0, k.dataType))
+        assert(bits(Option(k.eval(in))) == bits(w), s"$name eval, sample $i")
+        assert(bits(cg) == bits(w), s"$name codegen, sample $i")
+      }
+      want
+    }
+    val f = Gen.choose(-1000.0f, 1000.0f)
+    val d = Gen.choose(-1000.0, 1000.0)
+    val dbl = (x: Column) => x.cast("double")
+    val dotStep = (x: Column, y: Column) => dbl(x) * dbl(y)
+    val sqStep = (x: Column, y: Column) => (dbl(x) - dbl(y)) * (dbl(x) - dbl(y))
+    val fd = SparkSuite.samples(pairs(f, d), 60)
+    val ff = SparkSuite.samples(pairs(f, f), 60, 1000L)
+    for ((name, kernel, step) <- Seq(
+        ("vector_dot", VectorDot, dotStep),
+        ("vector_sqdist", VectorSqDist, sqStep))) {
+      val got = check(s"$name float×double", FloatType, DoubleType, fd,
+        kernel, step, lit(0.0)) ++
+        check(s"$name float×float", FloatType, FloatType, ff,
+          kernel, step, lit(0.0))
+      assert(got.exists(_.isEmpty) && got.count(_.isDefined) > 60)
+    }
+    // half the elements up to ±4e9, so squares and sums wrap; the
+    // composed form wraps only with ANSI arithmetic off
+    val big = Gen.oneOf(Gen.choose(-1000L, 1000L),
+      Gen.choose(-4000000000L, 4000000000L))
+    val ll = SparkSuite.samples(pairs(big, big), 60, 2000L)
+    val key = "spark.sql.ansi.enabled"
+    val saved = spark.conf.getOption(key)
+    spark.conf.set(key, false)
+    val l2 = try check("vector_l2sq", LongType, LongType, ll, VectorL2Sq,
+      (x, y) => (x - y) * (x - y), lit(0L))
+    finally saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    val wrapped = ll.zip(l2).count {
+      case ((Some(a), Some(b)), Some(v)) =>
+        a.zip(b).map { case (x, y) => BigInt(x - y).pow(2) }.sum != BigInt(v.asInstanceOf[Long])
+      case _ => false
+    }
+    assert(wrapped > 0, "no sample overflowed a long")
+  }
+
+  test("only plans/Functions.scala wires extensions into a session") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    // whole-file text, so a call split across lines is caught too
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"missing source dir $root")
+    val hooks = ("createOrReplaceTempFunction|functionRegistry|injectFunction|" +
+      "injectOptimizerRule|injectPlannerStrategy|extraStrategies|" +
+      "extraOptimizations|getActiveSession").r
+    val files = Files.walk(root)
+    val offenders = try for {
+      f <- files.iterator.asScala.toSeq
+      if f.toString.endsWith(".scala") &&
+        root.relativize(f).toString != "graft/plans/Functions.scala"
+      text = Files.readString(f)
+      m <- hooks.findAllMatchIn(text)
+    } yield s"${root.relativize(f)}:${text.take(m.start).count(_ == '\n') + 1}: ${m.matched}"
+    finally files.close()
+    assert(offenders.isEmpty,
+      "register through graft.plans.Functions:\n" + offenders.mkString("\n"))
   }
 }

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.plans.{TopKPerKey, TopKPerKeyExec, TopKStrategy}
+import graft.plans.{TopKPerKey, TopKPerKeyExec}
 
 /** The custom per-key top-k physical operator must be row-identical to
   * the window row_number composition, plan as partial → exchange → final
@@ -20,7 +20,6 @@ class TopKPerKeySpec extends SparkSuite {
   }
 
   test("row-identical to the window row_number form (k = 3)") {
-    TopKPerKey.install(spark)
     val got = TopKPerKey.topK(orders, Seq("o_custkey"),
         Seq("o_totalprice" -> true, "o_orderkey" -> false), 3)
       .orderBy("o_custkey", "rn").collect().map(_.toSeq).toSeq
@@ -30,7 +29,6 @@ class TopKPerKeySpec extends SparkSuite {
   }
 
   test("ambiguous (duplicated) column names fail loudly, not last-wins") {
-    TopKPerKey.install(spark)
     val sp = spark
     import sp.implicits._
     // self-join shape: both sides contribute a column named `v`
@@ -46,7 +44,6 @@ class TopKPerKeySpec extends SparkSuite {
   }
 
   test("k = 1 and keys with fewer than k rows") {
-    TopKPerKey.install(spark)
     val sp = spark
     import sp.implicits._
     val df = Seq(("a", 3.0, 1L), ("a", 7.0, 2L), ("b", 5.0, 3L))
@@ -60,7 +57,6 @@ class TopKPerKeySpec extends SparkSuite {
   }
 
   test("ties broken by the trailing unique column, as row_number would") {
-    TopKPerKey.install(spark)
     val sp = spark
     import sp.implicits._
     // equal v values: the id tie-break decides both membership and rank
@@ -72,7 +68,6 @@ class TopKPerKeySpec extends SparkSuite {
   }
 
   test("plan: partial below the exchange, final above; no Window, no Sort") {
-    TopKPerKey.install(spark)
     val df = TopKPerKey.topK(orders, Seq("o_custkey"),
       Seq("o_totalprice" -> true, "o_orderkey" -> false), 3)
     df.collect() // materialize so AQE finalizes the plan
@@ -90,7 +85,6 @@ class TopKPerKeySpec extends SparkSuite {
   }
 
   test("partial stage bounds what crosses the shuffle") {
-    TopKPerKey.install(spark)
     val sp = spark
     import sp.implicits._
     // 1000 rows, one key, spread over 8 partitions: the exchange sees at
@@ -104,7 +98,6 @@ class TopKPerKeySpec extends SparkSuite {
   }
 
   test("partial-stage overflow flush: supersets cross the shuffle, output unchanged") {
-    TopKPerKey.install(spark)
     import graft.plans.TopKPerKeyExec
     val saved = TopKPerKeyExec.PartialMaxKeys
     try {
@@ -119,7 +112,6 @@ class TopKPerKeySpec extends SparkSuite {
   }
 
   test("property: ≡ window form on random keys/values/partitionings") {
-    TopKPerKey.install(spark)
     val sp = spark
     import sp.implicits._
     import org.scalacheck.Gen
@@ -149,11 +141,7 @@ class TopKPerKeySpec extends SparkSuite {
     }
   }
 
-  test("install is idempotent; unknown column fails loudly") {
-    TopKPerKey.install(spark)
-    TopKPerKey.install(spark)
-    val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    assert(classic.experimental.extraStrategies.count(_ eq TopKStrategy) == 1)
+  test("unknown column fails loudly") {
     val err = intercept[Exception] {
       TopKPerKey.topK(orders, Seq("nope"), Seq("o_totalprice" -> true), 3).collect()
     }
